@@ -96,7 +96,12 @@ object Registry {
       write: String => Unit): String =
     memo(config)(commit(s, path(s, config, input), parts: _*)(write))
 
-  private val memos = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+  /** A fit evaluated at most once: concurrent callers of one key block on
+    * its lock, and a fit that throws stays unevaluated.
+    */
+  private final class Once(fit: () => AnyRef) { lazy val value: AnyRef = fit() }
+
+  private val memos = new java.util.concurrent.ConcurrentHashMap[String, Once]()
   private val lookupCount = new java.util.concurrent.atomic.AtomicLong()
 
   /** Memo calls so far in this process — a harness reads the delta around
@@ -106,10 +111,14 @@ object Registry {
 
   /** Process memo for deterministic fits: `fit` runs once per `key`. Sound
     * because every memoized fit is a pure function of its key (data dir +
-    * fixed hyperparameters).
+    * fixed hyperparameters). Re-entrant: the map stores only the thunk and
+    * the fit runs outside the map's bin lock, so a fit may itself call
+    * `memo`. A fit that throws is dropped, and the next call retries it.
     */
   def memo[T <: AnyRef](key: String)(fit: => T): T = {
     lookupCount.incrementAndGet()
-    memos.computeIfAbsent(key, _ => fit).asInstanceOf[T]
+    val once = memos.computeIfAbsent(key, _ => new Once(() => fit))
+    try once.value.asInstanceOf[T]
+    catch { case e: Throwable => memos.remove(key, once); throw e }
   }
 }

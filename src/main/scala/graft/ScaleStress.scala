@@ -37,13 +37,6 @@ import org.apache.spark.sql.functions._
   */
 object ScaleStress {
 
-  private def gated(s: SparkSession, out: String)(write: => Unit): String = {
-    val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) write
-    out
-  }
-
   /** Expand the three extension tables ×R into `outDir` (same layout as a
     * testdata dir, so dir-parameterized query fns run on it unchanged).
     */
@@ -55,7 +48,7 @@ object ScaleStress {
     // file 10× larger and cap the scan at 16 tasks
     val nFiles = math.min(512, math.max(16, 16 * r / 10))
 
-    gated(s, s"$outDir/documents.parquet") {
+    Registry.commit(s, s"$outDir/documents.parquet") { out =>
       val docs = s.read.parquet(s"$baseDir/documents.parquet")
       docs.crossJoin(broadcast(reps)).select(
           (col("doc_id") + col("rep").cast("long") * 1000000L).as("doc_id"),
@@ -65,10 +58,10 @@ object ScaleStress {
           col("lang"), col("source"))
         .withColumn("n_chars", length(col("text")).cast("long"))
         .repartition(nFiles)
-        .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
+        .write.mode("overwrite").parquet(out)
     }
 
-    gated(s, s"$outDir/events.parquet") {
+    Registry.commit(s, s"$outDir/events.parquet") { out =>
       val ev = graft.sources.Events.read(s, s"$baseDir/events.parquet")
       ev.crossJoin(broadcast(reps)).select(
           (col("event_id") + col("rep").cast("long") * 100000000L).as("event_id"),
@@ -76,10 +69,10 @@ object ScaleStress {
           (col("user_id") + col("rep").cast("long") * 1000000L).as("user_id"),
           col("event_type"), col("value"), col("props"))
         .repartition(nFiles)
-        .write.mode("overwrite").parquet(s"$outDir/events.parquet")
+        .write.mode("overwrite").parquet(out)
     }
 
-    gated(s, s"$outDir/embeddings.parquet") {
+    Registry.commit(s, s"$outDir/embeddings.parquet") { out =>
       val em = s.read.parquet(s"$baseDir/embeddings.parquet")
       // Replica vectors are deterministically PERTURBED (±0.5/component
       // from xxhash64(vec_id, rep, j); replica 0 verbatim): verbatim
@@ -99,16 +92,15 @@ object ScaleStress {
                 .cast("float"))).as("embedding"),
           col("label"))
         .repartition(nFiles)
-        .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
+        .write.mode("overwrite").parquet(out)
     }
 
     // Dim tables copy VERBATIM — the honest scale story is facts ×R with
     // fixed model-sized dims (a 10× corpus does not mint 10× suppliers);
     // needed so dim-joining probes (join_geo_polygon) run on the dir.
-    for (t <- Seq("customer", "supplier")) gated(s, s"$outDir/$t.parquet") {
-      s.read.parquet(s"$baseDir/$t.parquet")
-        .write.mode("overwrite").parquet(s"$outDir/$t.parquet")
-    }
+    for (t <- Seq("customer", "supplier"))
+      Registry.commit(s, s"$outDir/$t.parquet")(
+        s.read.parquet(s"$baseDir/$t.parquet").write.mode("overwrite").parquet(_))
   }
 
   /** Artifact path for a probe-scoped persisted ShingleIndex, keyed by
@@ -133,7 +125,7 @@ object ScaleStress {
     val out = new java.io.File(
       s"target/scale-stress/idx/${new java.io.File(d).getName}-phashmedia-v1")
       .getAbsolutePath
-    gated(s, out) {
+    Registry.commit(s, out) { out =>
       val media = Multimodal.fromDigestPng(
         s.read.parquet(s"$d/documents.parquet"), "doc_id", "text")
       val originals = Multimodal.resizePayload(media, "bytes", 8.0)
@@ -262,10 +254,8 @@ object ScaleStress {
       //                          and serve (O(delta + affected) compute
       //                          + one linear state pass).
       "op_containment" -> ((s: SparkSession, d: String) => {
-        val path = twinIndexPath(d, "cont")
-        if (!Dedup.shingleIndexExists(s, path))
-          Dedup.buildAndSaveShingleIndex(withTwins(s, d), "doc_id", "text",
-            path, 3, 20)
+        val path = Registry.commit(s, twinIndexPath(d, "cont"), Dedup.ShingleIndexParts: _*)(
+          Dedup.buildAndSaveShingleIndex(withTwins(s, d), "doc_id", "text", _, 3, 20))
         Dedup.containmentPairsFromIndex(Dedup.loadShingleIndex(s, path), 0.7)
       }),
       "op_shidx_build" -> ((s: SparkSession, d: String) =>
@@ -279,9 +269,8 @@ object ScaleStress {
         val all = withTwins(s, d)
         val base = all.filter(col("doc_id") % 101 =!= 3)
         val delta = all.filter(col("doc_id") % 101 === 3)
-        val path = twinIndexPath(d, "base101")
-        if (!Dedup.shingleIndexExists(s, path))
-          Dedup.buildAndSaveShingleIndex(base, "doc_id", "text", path, 3, 20)
+        val path = Registry.commit(s, twinIndexPath(d, "base101"), Dedup.ShingleIndexParts: _*)(
+          Dedup.buildAndSaveShingleIndex(base, "doc_id", "text", _, 3, 20))
         Dedup.containmentPairsFromIndex(
           Dedup.mergeShingleIndex(Dedup.loadShingleIndex(s, path), delta,
             "doc_id", "text", 3, 20), 0.7)
@@ -304,7 +293,7 @@ object ScaleStress {
         val st = new java.io.File(
           s"target/scale-stress/idx/${new java.io.File(d).getName}-phashbase-v1")
           .getAbsolutePath
-        gated(s, s"$st/pairs") {
+        Registry.commit(s, st, "hashes", "pairs") { st =>
           val baseHashes = Multimodal.averageHashes(
             s.read.parquet(media).filter(col("media_id") % 101 =!= 3),
             "media_id", "bytes").localCheckpoint()

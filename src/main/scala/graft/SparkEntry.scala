@@ -26,16 +26,6 @@ object SparkEntry {
   private def T(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  /** Process-level memo for deterministic (seeded) model fits — the
-    * fit-once/score-many discipline: a query's later executions pay only
-    * the scoring scans. Sound because every memoized fit is a pure
-    * function of (data dir, fixed hyperparameters).
-    */
-  private val fittedModels =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-  private def fittedModel[T <: AnyRef](key: String)(fit: => T): T =
-    fittedModels.computeIfAbsent(key, _ => fit).asInstanceOf[T]
-
   /** Temp dirs registered here are recursively deleted by one JVM-exit
     * hook — scratch state (the stream_upsert snapshot chain) must not
     * accumulate in /tmp across repeated bench/verify processes.
@@ -72,47 +62,10 @@ object SparkEntry {
     }
   }
 
-  /** Root for cross-run persisted artifacts (fitted quantizers,
-    * materialized fixtures): the build's own target dir, NOT a shared
-    * world-writable /tmp — a predictable shared path invites cross-user
-    * collision and artifact poisoning.
-    */
-  private def registryRoot: String =
-    sys.env.getOrElse("GRAFT_REGISTRY_DIR", {
-      // Anchor to the BUILD's target dir via the loaded class's code
-      // source, NOT the process cwd: a launcher running Bench/Verify from
-      // any other cwd would otherwise resolve a fresh empty registry
-      // every run, silently re-paying every one-time fit (measured: r7
-      // driver cold_total 164.5 s vs 112.4 s with the registry warm).
-      // Code source is .../target/scala-2.13/classes for tests, but sbt
-      // `runMain` executes a packaged jar at
-      // .../target/bg-jobs/sbt_<id>/job-1/target/<hash>/<hash>/x.jar —
-      // an EPHEMERAL per-invocation dir that itself contains a `target`
-      // component. Walking up to the FIRST `target` ancestor therefore
-      // resolved a fresh empty registry on every runMain, silently
-      // re-paying every one-time fit each round (the r7→r8 cold_total
-      // mystery: artifacts landed in bg-jobs dirs and were never reused).
-      // Take the TOPMOST `target` ancestor — the build's own target dir,
-      // stable across invocations and shared with the test classpath.
-      try {
-        val loc = SparkEntry.getClass.getProtectionDomain.getCodeSource.getLocation
-        var cur = java.nio.file.Paths.get(loc.toURI)
-        var top: java.nio.file.Path = null
-        while (cur != null) {
-          if (cur.getFileName != null && cur.getFileName.toString == "target")
-            top = cur
-          cur = cur.getParent
-        }
-        if (top != null) top.resolve("graft-registry").toString
-        else new java.io.File("target/graft-registry").getAbsolutePath
-      } catch { case _: Exception =>
-        new java.io.File("target/graft-registry").getAbsolutePath }
-    })
-
   /** Oracle SQL published at query-run time (the fitted-params
     * lifecycle): set when the query executes, merged into [[oracleSql]].
     * Each publish ALSO persists the fragment under
-    * `$registryRoot/oracle_sql/<name>.sql`, and [[publishedOracles]]
+    * `oracle_sql/<name>.sql` under the registry root, and [[publishedOracles]]
     * falls back to that file when the in-process value is absent — so a
     * cold process can dump a generated oracle for a query that ran in an
     * earlier process (same-fixture staleness is impossible in the driver
@@ -134,7 +87,7 @@ object SparkEntry {
   private def oracleFragmentFile(name: String): java.nio.file.Path = {
     val fixture = sys.props.get("graft.oracle.fixture")
       .map(_.replaceAll("[^A-Za-z0-9.]+", "-").stripPrefix("-"))
-    java.nio.file.Paths.get(registryRoot, "oracle_sql",
+    java.nio.file.Paths.get(Registry.root, "oracle_sql",
       fixture.fold(s"$name.sql")(f => s"$name.$f.sql"))
   }
 
@@ -156,26 +109,6 @@ object SparkEntry {
         else None
       }.map(n -> _)
     }.toMap
-
-  /** md5-hex artifact key (the DiskRegistry key scheme). */
-  private def registryKey(config: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(config.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-
-  /** Content fingerprint of a table directory (names, sizes, mtimes) —
-    * persisted-model keys include it so a REGENERATED fixture can never
-    * be served a stale artifact fitted on the old data.
-    */
-  private def tableFingerprint(s: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val stats =
-      if (!fs.exists(p)) Array("absent")
-      else fs.listStatus(p).sortBy(_.getPath.getName)
-        .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-    registryKey(stats.mkString("|"))
-  }
 
   /** events scan with `ts` normalized to a µs timestamp regardless of the
     * fixture generation's physical parquet type (ns-long vs µs — see
@@ -263,8 +196,7 @@ object SparkEntry {
     * package-private so LakeSinksSpec audits the exact artifact.
     */
   private[graft] def compactRoot(s: SparkSession, dir: String): String =
-    s"$registryRoot/compact_${registryKey(
-      s"compact-v3|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
+    Registry.path(s, s"compact-v3|$dir", s"$dir/events.parquet")
 
   /** Materialize-once compacted events copy (registry-gated) — shared by
     * the compaction query and the parquet-file-source streaming queries,
@@ -278,20 +210,15 @@ object SparkEntry {
     * from the data itself.
     */
   private def compactMaterialized(s: SparkSession, dir: String): String =
-    fittedModel(s"compact|$dir") {
-      val out = compactRoot(s, dir)
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
-        val srcBytes = fs.getContentSummary(
-          new org.apache.hadoop.fs.Path(s"$dir/events.parquet")).getLength
-        val nFiles = math.max(2L, srcBytes / (32L << 20)).toInt
-        E(s, dir).repartitionByRange(nFiles, col("ts"))
-          .sortWithinPartitions("ts", "event_id")
-          .write.mode("overwrite").parquet(out)
-      }
-      out
-    }
+    Registry.memo(s"compact|$dir")(Registry.commit(s, compactRoot(s, dir)) { out =>
+      val src = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
+      val srcBytes = src.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .getContentSummary(src).getLength
+      val nFiles = math.max(2L, srcBytes / (32L << 20)).toInt
+      E(s, dir).repartitionByRange(nFiles, col("ts"))
+        .sortWithinPartitions("ts", "event_id")
+        .write.mode("overwrite").parquet(out)
+    })
 
   private def q_sink_compact(s: SparkSession, dir: String): DataFrame = {
     val root = compactMaterialized(s, dir)
@@ -308,8 +235,7 @@ object SparkEntry {
     * exact artifact this query serves.
     */
   private[graft] def zorderRoot(s: SparkSession, dir: String): String =
-    s"$registryRoot/zorder_${registryKey(
-      s"zorder-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
+    Registry.path(s, s"zorder-v1|$dir", s"$dir/events.parquet")
 
   /** Z-order compaction — multi-dimensional lake maintenance: files tiled
     * by the Morton interleave of (ts, user_id), so parquet min/max stats
@@ -321,16 +247,11 @@ object SparkEntry {
     * row-corrupting layout pass hash-fails.
     */
   private def q_sink_zorder(s: SparkSession, dir: String): DataFrame = {
-    val root = fittedModel(s"zorder|$dir") {
-      val out = zorderRoot(s, dir)
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker))
-        graft.ops.ZOrder.layout(E(s, dir),
-            graft.sources.Events.epochMicros(col("ts")), col("user_id"), nFiles = 8)
-          .write.mode("overwrite").parquet(out)
-      out
-    }
+    val root = Registry.memo(s"zorder|$dir")(Registry.commit(s, zorderRoot(s, dir)) { out =>
+      graft.ops.ZOrder.layout(E(s, dir),
+          graft.sources.Events.epochMicros(col("ts")), col("user_id"), nFiles = 8)
+        .write.mode("overwrite").parquet(out)
+    })
     s.read.parquet(root)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"),
@@ -352,19 +273,13 @@ object SparkEntry {
     * asserts the shipped query's scan carries only in-range partitions.
     */
   private[graft] def partitionedRoot(s: SparkSession, dir: String): String =
-    s"$registryRoot/part_${registryKey(
-      s"part-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
+    Registry.path(s, s"part-v1|$dir", s"$dir/events.parquet")
 
   private def partitionedMaterialized(s: SparkSession, dir: String): String =
-    fittedModel(s"part|$dir") {
-      val out = partitionedRoot(s, dir)
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker))
-        E(s, dir).withColumn("event_date", to_date(col("ts")))
-          .write.partitionBy("event_date").mode("overwrite").parquet(out)
-      out
-    }
+    Registry.memo(s"part|$dir")(Registry.commit(s, partitionedRoot(s, dir)) { out =>
+      E(s, dir).withColumn("event_date", to_date(col("ts")))
+        .write.partitionBy("event_date").mode("overwrite").parquet(out)
+    })
 
   /** DATA-SKIPPING MANIFEST scan (zone maps — the Iceberg/Delta file-stats
     * pattern): the corpus materializes ONCE into a range-clustered
@@ -378,21 +293,15 @@ object SparkEntry {
     * planning + O(matching files) IO instead of O(corpus).
     */
   private def manifestMaterialized(s: SparkSession, dir: String): String =
-    fittedModel(s"manifest|$dir") {
-      val out = s"$registryRoot/manifest_${registryKey(
-        s"manifest-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(s"$out/manifest", "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
-        E(s, dir).repartitionByRange(16, col("ts"))
-          .write.mode("overwrite").parquet(s"$out/data")
-        s.read.parquet(s"$out/data")
-          .groupBy(input_file_name().as("file"))
-          .agg(min(col("ts")).as("min_ts"), max(col("ts")).as("max_ts"),
-            count(lit(1)).as("n_rows"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$out/manifest")
-      }
-      out
+    Registry.artifact(s, s"manifest-v1|$dir", s"$dir/events.parquet",
+        "data", "manifest") { out =>
+      E(s, dir).repartitionByRange(16, col("ts"))
+        .write.mode("overwrite").parquet(s"$out/data")
+      s.read.parquet(s"$out/data")
+        .groupBy(input_file_name().as("file"))
+        .agg(min(col("ts")).as("min_ts"), max(col("ts")).as("max_ts"),
+          count(lit(1)).as("n_rows"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$out/manifest")
     }
 
   private[graft] def manifestPrunedFiles(s: SparkSession, dir: String,
@@ -680,7 +589,7 @@ object SparkEntry {
     * — the cold/warm split the bench's registry discipline reports.
     */
   private def q_join_bucketed(s: SparkSession, dir: String): DataFrame = {
-    val suffix = registryKey(s"bucketed-v1|$dir")
+    val suffix = Registry.key(s"bucketed-v1|$dir")
     val ot = s"orders_b_$suffix"
     val lt = s"lineitem_b_$suffix"
     // the catalog is per-process (in-memory) but the warehouse dir is not:
@@ -719,21 +628,22 @@ object SparkEntry {
     * distinct-tag collect is a handful of strings).
     */
   private def q_scan_csv(s: SparkSession, dir: String): DataFrame = {
-    val (root, types) = fittedModel(s"csv|$dir") {
-      val out = s"$registryRoot/csv_${registryKey(
-        s"csv-v2|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-      // ONE scan: the partitioned text write splits per tag on the
-      // executors (a per-tag driver loop would rescan events |tags| times)
-      E(s, dir)
-        // explicit concat, not concat_ws: concat_ws SKIPS nulls, so a null
-        // value would emit a separator-less line that reparses as
-        // (ts, null-value-of-wrong-field). coalesce-to-"" keeps the round
-        // trip total: "ts;" reparses as (ts, null) — the value it had.
-        .select(col("event_type"), concat(
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS"),
-          lit(";"),
-          coalesce(col("value").cast("string"), lit(""))).as("value"))
-        .write.partitionBy("event_type").mode("overwrite").text(out)
+    val (root, types) = Registry.memo(s"csv|$dir") {
+      val csv = Registry.path(s, s"csv-v2|$dir", s"$dir/events.parquet")
+      val out = Registry.commit(s, csv) { out =>
+        // ONE scan: the partitioned text write splits per tag on the
+        // executors (a per-tag driver loop would rescan events |tags| times)
+        E(s, dir)
+          // explicit concat, not concat_ws: concat_ws SKIPS nulls, so a null
+          // value would emit a separator-less line that reparses as
+          // (ts, null-value-of-wrong-field). coalesce-to-"" keeps the round
+          // trip total: "ts;" reparses as (ts, null) — the value it had.
+          .select(col("event_type"), concat(
+            date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS"),
+            lit(";"),
+            coalesce(col("value").cast("string"), lit(""))).as("value"))
+          .write.partitionBy("event_type").mode("overwrite").text(out)
+      }
       // Tag enumeration is data-sized in principle; the cap makes the
       // fixture-sized assumption explicit instead of silently collecting
       // an unbounded distinct if the fixture ever grows a high-cardinality
@@ -771,17 +681,11 @@ object SparkEntry {
     * file-source streaming queries.
     */
   private def jsonlRoot(s: SparkSession, dir: String): String =
-    fittedModel(s"jsonl|$dir") {
-      val out = s"$registryRoot/jsonl_${registryKey(
-        s"jsonl-v2|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker))
-        T(s, dir, "documents")
-          .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
-            col("source"), col("n_chars"))).as("value"))
-          .write.mode("overwrite").text(out)
-      out
+    Registry.artifact(s, s"jsonl-v2|$dir", s"$dir/documents.parquet") { out =>
+      T(s, dir, "documents")
+        .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
+          col("source"), col("n_chars"))).as("value"))
+        .write.mode("overwrite").text(out)
     }
 
   private def q_scan_jsonl(s: SparkSession, dir: String): DataFrame = {
@@ -1116,7 +1020,7 @@ object SparkEntry {
     * stats make the scalar agg a footer read.
     */
   private def assertTwinIdHeadroom(s: SparkSession, dir: String): Unit =
-    fittedModel(s"idcap|$dir") {
+    Registry.memo(s"idcap|$dir") {
       val mx = T(s, dir, "documents").agg(max(col("doc_id"))).head().getLong(0)
       require(mx < 100000,
         s"documents doc_id max $mx >= 100000: the twin-id offset would collide")
@@ -1149,15 +1053,9 @@ object SparkEntry {
     * removes the derivation pipeline from the bench's driver window.
     */
   private def minhashBandsMaterialized(s: SparkSession, dir: String): String =
-    fittedModel(s"minhashbands|$dir") {
-      val out = s"$registryRoot/minhashbands_${registryKey(
-        s"minhashbands-v1|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker))
-        Dedup.bandTable(docsWithDups(s, dir), "doc_id", "text")
-          .coalesce(1).write.mode("overwrite").parquet(out)
-      out
+    Registry.artifact(s, s"minhashbands-v1|$dir", s"$dir/documents.parquet") { out =>
+      Dedup.bandTable(docsWithDups(s, dir), "doc_id", "text")
+        .coalesce(1).write.mode("overwrite").parquet(out)
     }
 
   private def q_dedup_minhash_lsh(s: SparkSession, dir: String): DataFrame =
@@ -1181,25 +1079,15 @@ object SparkEntry {
     */
   private def shingleIndexMaterialized(s: SparkSession, dir: String,
       variant: String, corpus: DataFrame, cap: Int): String =
-    // corpus is STRICT on purpose: docsWithDups memoizes its id-headroom
-    // assert through fittedModel, and evaluating it inside this closure
-    // would nest computeIfAbsent calls on the same map — a
-    // hash-bin-dependent "Recursive update" IllegalStateException
-    fittedModel(s"shidx|$variant|$dir|cap=$cap") {
-      val out = s"$registryRoot/shidx_${registryKey(
-        // v3: + persisted pair state (pairs/) and strategy stats
-        // (meta/) — serving scans state instead of recomputing the
-        // mention agg; a v2 artifact (no pairs/meta) must never
-        // shadow the new layout's registry entry
-        s"shidx-v3|$variant|$dir|n=3|cap=$cap|${
-          tableFingerprint(s, s"$dir/documents.parquet")}")}"
-      if (!Dedup.shingleIndexExists(s, out))
-        // parquet-through build: groups is born on disk and docs derives
-        // from the re-read — never a second staged copy of the state
-        // (the r12 third-decade lesson; see buildAndSaveShingleIndex)
-        Dedup.buildAndSaveShingleIndex(corpus, "doc_id", "text", out,
-          3, cap)
-      out
+    // v3: + persisted pair state (pairs/) and strategy stats (meta/) —
+    // serving scans state instead of recomputing the mention agg; a v2
+    // artifact (no pairs/meta) must never shadow the new layout's entry
+    Registry.artifact(s, s"shidx-v3|$variant|$dir|n=3|cap=$cap",
+        s"$dir/documents.parquet", Dedup.ShingleIndexParts: _*) { out =>
+      // parquet-through build: groups is born on disk and docs derives
+      // from the re-read — never a second staged copy of the state
+      // (the r12 third-decade lesson; see buildAndSaveShingleIndex)
+      Dedup.buildAndSaveShingleIndex(corpus, "doc_id", "text", out, 3, cap)
     }
 
   private def q_dedup_ngram_jaccard(s: SparkSession, dir: String): DataFrame =
@@ -1262,13 +1150,9 @@ object SparkEntry {
     val all = docsWithDups(s, dir)
     val delta = all.filter(col("doc_id") % 7 === 3)
     val base = all.filter(col("doc_id") % 7 =!= 3)
-    val basePath = fittedModel(s"shidxbase|$dir") {
-      val out = s"$registryRoot/shidxbase_${registryKey(
-        s"shidxbase-v1|mod7|dups|$dir|n=3|cap=20|${
-          tableFingerprint(s, s"$dir/documents.parquet")}")}"
-      if (!Dedup.shingleIndexExists(s, out))
-        Dedup.buildAndSaveShingleIndex(base, "doc_id", "text", out, 3, 20)
-      out
+    val basePath = Registry.artifact(s, s"shidxbase-v1|mod7|dups|$dir|n=3|cap=20",
+        s"$dir/documents.parquet", Dedup.ShingleIndexParts: _*) { out =>
+      Dedup.buildAndSaveShingleIndex(base, "doc_id", "text", out, 3, 20)
     }
     Dedup.containmentPairsFromIndex(
         Dedup.mergeShingleIndex(Dedup.loadShingleIndex(s, basePath), delta,
@@ -1320,38 +1204,30 @@ object SparkEntry {
     // daily step rebuilds (that rebuild is exactly what incremental dedup
     // exists to avoid). Cold pass pays the one-time index build; warm
     // passes price at O(step): read bands+stats parquet, run the step.
-    val stateDir = fittedModel(s"dedupstate|$dir") {
-      val out = s"$registryRoot/dedupstate_${registryKey(
-        s"dedupstate-v2|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}")}"
-      // _SUCCESS-gated (the langid/IvfModel discipline): a fresh process
-      // must LOAD the fingerprint-keyed index, not rebuild it — the
-      // rebuild is the cost this registry exists to avoid. The stats
-      // marker commits last, so a half-written state never gates.
-      // v2: the state also stores YESTERDAY'S PAIRS. The base pair set
-      // depends only on the base corpus, so re-deriving it per run
-      // (band self-join + full Jaccard re-score) made every "daily
-      // step" pay O(base pairs) — the exact cost the incremental path
-      // exists to avoid. Production stores yesterday's dedup output;
-      // so does the state dir, and the warm run prices at
-      // O(delta + affected) + one tiny pairs scan.
-      val marker = new org.apache.hadoop.fs.Path(s"$out/stats", "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
-        val raw = Dedup.initialDedupState(base, "doc_id", "text")
-        val bands = raw.bands.localCheckpoint() // feeds the write AND the pair join
-        val stats = raw.stats.localCheckpoint() // feeds the write AND the hot list
-        bands.write.mode("overwrite").parquet(s"$out/bands")
-        val baseCand = bands.as("a").join(bands.as("b"),
-            col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-          .distinct()
-        Dedup.jaccardRescoreWithHotList(base, "doc_id", "text", baseCand,
-            0.6, 3, Dedup.hotList(stats))
-          .write.mode("overwrite").parquet(s"$out/pairs")
-        stats.write.mode("overwrite").parquet(s"$out/stats")
-      }
-      out
+    // A fresh process LOADS the fingerprint-keyed state, never rebuilds
+    // it — the rebuild is the cost this registry exists to avoid.
+    // v2: the state also stores YESTERDAY'S PAIRS. The base pair set
+    // depends only on the base corpus, so re-deriving it per run
+    // (band self-join + full Jaccard re-score) made every "daily
+    // step" pay O(base pairs) — the exact cost the incremental path
+    // exists to avoid. Production stores yesterday's dedup output;
+    // so does the state dir, and the warm run prices at
+    // O(delta + affected) + one tiny pairs scan.
+    val stateDir = Registry.artifact(s, s"dedupstate-v2|$dir",
+        s"$dir/documents.parquet", "bands", "pairs", "stats") { out =>
+      val raw = Dedup.initialDedupState(base, "doc_id", "text")
+      val bands = raw.bands.localCheckpoint() // feeds the write AND the pair join
+      val stats = raw.stats.localCheckpoint() // feeds the write AND the hot list
+      bands.write.mode("overwrite").parquet(s"$out/bands")
+      val baseCand = bands.as("a").join(bands.as("b"),
+          col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
+            col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        .distinct()
+      Dedup.jaccardRescoreWithHotList(base, "doc_id", "text", baseCand,
+          0.6, 3, Dedup.hotList(stats))
+        .write.mode("overwrite").parquet(s"$out/pairs")
+      stats.write.mode("overwrite").parquet(s"$out/stats")
     }
     val st0 = Dedup.DedupState(s.read.parquet(s"$stateDir/bands"),
       s.read.parquet(s"$stateDir/stats"))
@@ -1416,7 +1292,7 @@ object SparkEntry {
     * count job (8+ graph-family call sites per pass; r11 ADVICE).
     */
   private def embCount(s: SparkSession, dir: String): Long =
-    fittedModel(s"embcount|$dir") {
+    Registry.memo(s"embcount|$dir") {
       java.lang.Long.valueOf(T(s, dir, "embeddings").count())
     }.longValue()
 
@@ -1432,7 +1308,7 @@ object SparkEntry {
     * byte-identical to the static era.
     */
   private def embSchedule(s: SparkSession, dir: String): Seq[Int] =
-    fittedModel(s"embsched|$dir") {
+    Registry.memo(s"embsched|$dir") {
       Similarity.autoPlanesSchedule(embCount(s, dir))
     }
 
@@ -1495,17 +1371,11 @@ object SparkEntry {
     // run at the base's schedule.
     val sched = embSchedule(s, dir)
     publishOracle("simsearch_knn_incr", knnGraphOracleSql(sched))
-    val schedKey = sched.mkString(".") // see knnEdges' tripwire note
-    val basePath = fittedModel(s"knnbase|$dir") {
-      val out = s"$registryRoot/knnbase_${registryKey(
-        s"knnbase-v2|k=3|sched=$schedKey|mod5|$dir|${
-          tableFingerprint(s, s"$dir/embeddings.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker))
-        Similarity.knnGraphSched(base, "vec_id", "embedding", 3, sched)
-          .write.mode("overwrite").parquet(out)
-      out
+    val basePath = Registry.artifact(s,
+        s"knnbase-v2|k=3|sched=${sched.mkString(".")}|mod5|$dir",
+        s"$dir/embeddings.parquet") { out =>
+      Similarity.knnGraphSched(base, "vec_id", "embedding", 3, sched)
+        .write.mode("overwrite").parquet(out)
     }
     Similarity.knnGraphMergeSched(s.read.parquet(basePath), base, delta,
         "vec_id", "embedding", 3, sched)
@@ -1534,23 +1404,14 @@ object SparkEntry {
     */
   private def knnEdges(s: SparkSession, dir: String): DataFrame = {
     val sched = embSchedule(s, dir)
-    // hoisted: a quoted literal inside the key interpolation would blind
-    // RegistryFingerprintSpec's static fingerprint tripwire
-    val schedKey = sched.mkString(".")
-    val path = fittedModel(s"knnedges|$dir") {
-      // v2: density-SCHEDULED bucket bits (in the key — a schedule
-      // change can never serve a stale edge table); all-8s below the
-      // floor, so every oracle fixture's artifact bytes are unchanged
-      val out = s"$registryRoot/knnedges_${registryKey(
-        s"knnedges-v2|k=3|sched=$schedKey|$dir|${
-          tableFingerprint(s, s"$dir/embeddings.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker))
-        Similarity.knnGraphSched(T(s, dir, "embeddings"), "vec_id",
-            "embedding", 3, sched)
-          .write.mode("overwrite").parquet(out)
-      out
+    // v2: density-SCHEDULED bucket bits (in the key — a schedule change
+    // can never serve a stale edge table); all-8s below the floor, so
+    // every oracle fixture's artifact bytes are unchanged
+    val path = Registry.artifact(s, s"knnedges-v2|k=3|sched=${sched.mkString(".")}|$dir",
+        s"$dir/embeddings.parquet") { out =>
+      Similarity.knnGraphSched(T(s, dir, "embeddings"), "vec_id",
+          "embedding", 3, sched)
+        .write.mode("overwrite").parquet(out)
     }
     s.read.parquet(path)
   }
@@ -1813,12 +1674,7 @@ object SparkEntry {
     */
   private def q_simsearch_ivf(s: SparkSession, dir: String): DataFrame = {
     val e = T(s, dir, "embeddings")
-    // the data fingerprint in the key invalidates the persisted quantizer
-    // if the embeddings fixture is ever regenerated
-    val fp = tableFingerprint(s, s"$dir/embeddings.parquet")
-    val key = registryKey(s"ivf-v1|$dir|$fp|embedding|nLists=16|seed=42|maxIter=8")
-    val path = s"$registryRoot/ivf_$key.parquet"
-    val model = Similarity.fitOrLoadIvf(e, "embedding", path, nLists = 16, seed = 42L)
+    val model = ivfModel(s, dir)
     // publish the served centroids for the oracle dump
     publishOracle("simsearch_ivf", ivfOracleSqlFor(
       model.centroids.map { case (id, v) =>
@@ -1847,12 +1703,11 @@ object SparkEntry {
     */
   private def q_simsearch_pq(s: SparkSession, dir: String): DataFrame = {
     val e = T(s, dir, "embeddings")
-    val fp = tableFingerprint(s, s"$dir/embeddings.parquet")
     // every fit hyperparameter is IN the key (the IVF discipline): a
     // changed fit depth must mint a new artifact, never serve a stale one
-    val key = registryKey(s"pq-v1|$dir|$fp|embedding|m=8|k=64|seed=42|maxIter=8")
-    val path = s"$registryRoot/pq_$key.parquet"
-    val model = Similarity.fitOrLoadPq(e, "embedding", path,
+    val model = Similarity.fitOrLoadPq(e, "embedding",
+      Registry.path(s, s"pq-v1|$dir|embedding|m=8|k=64|seed=42|maxIter=8",
+        s"$dir/embeddings.parquet"),
       m = 8, k = 64, seed = 42L, maxIter = 8)
     // publish the served codebooks for the oracle dump (see ivf)
     publishOracle("simsearch_pq", pqOracleSqlFor(model.subDim,
@@ -1876,14 +1731,20 @@ object SparkEntry {
     */
   private def q_simsearch_ivf_exact(s: SparkSession, dir: String): DataFrame = {
     val e = T(s, dir, "embeddings")
-    val fp = tableFingerprint(s, s"$dir/embeddings.parquet")
-    val key = registryKey(s"ivf-v1|$dir|$fp|embedding|nLists=16|seed=42|maxIter=8")
-    val path = s"$registryRoot/ivf_$key.parquet"
-    val model = Similarity.fitOrLoadIvf(e, "embedding", path, nLists = 16, seed = 42L)
-    Similarity.ivfSearch(model, e.filter(col("vec_id") < 10), e,
+    Similarity.ivfSearch(ivfModel(s, dir), e.filter(col("vec_id") < 10), e,
         "vec_id", "embedding", 5, nProbe = 16)
       .orderBy("qid", "rnk")
   }
+
+  /** The corpus's IVF quantizer, shared by both IVF queries — the data
+    * fingerprint in its key invalidates the persisted quantizer if the
+    * embeddings fixture is ever regenerated.
+    */
+  private def ivfModel(s: SparkSession, dir: String): Similarity.IvfModel =
+    Similarity.fitOrLoadIvf(T(s, dir, "embeddings"), "embedding",
+      Registry.path(s, s"ivf-v1|$dir|embedding|nLists=16|seed=42|maxIter=8",
+        s"$dir/embeddings.parquet"),
+      nLists = 16, seed = 42L)
 
   /** Linear interpolation of resample gaps, windowed PER TAG. */
   private def q_win_interpolate(s: SparkSession, dir: String): DataFrame = {
@@ -1937,18 +1798,10 @@ object SparkEntry {
     */
   private def q_text_langid_trained(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-    val profPath = fittedModel(s"langid|$dir") {
-      val fp = tableFingerprint(s, s"$dir/documents.parquet")
-      val key = registryKey(s"langid-v1|$dir|$fp|k=100|n=3")
-      val path = s"$registryRoot/langid_$key.parquet"
-      // _SUCCESS-gated like IvfModel.save/exists: a half-written dir from
-      // a killed job does not count as a committed profile
-      val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker))
-        TextAnalysis.langProfiles(docs, "lang", "text", k = 100)
-          .coalesce(1).write.mode("overwrite").parquet(path)
-      path
+    val profPath = Registry.artifact(s, s"langid-v1|$dir|k=100|n=3",
+        s"$dir/documents.parquet") { out =>
+      TextAnalysis.langProfiles(docs, "lang", "text", k = 100)
+        .coalesce(1).write.mode("overwrite").parquet(out)
     }
     val profiles = s.read.parquet(profPath)
     TextAnalysis.classifyLang(docs, "doc_id", "text", profiles, k = 100)
@@ -1976,7 +1829,7 @@ object SparkEntry {
     */
   private def q_text_nb_classifier(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-    val model = fittedModel(s"nb|$dir") {
+    val model = Registry.memo(s"nb|$dir") {
       TextAnalysis.fitNaiveBayes(docs, "lang", "text", buckets = 1024)
     }
     model.classify(docs, "doc_id", "text")
@@ -2034,7 +1887,7 @@ object SparkEntry {
     */
   private def q_text_perplexity(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-    val lm = fittedModel(s"lm-en|$dir") {
+    val lm = Registry.memo(s"lm-en|$dir") {
       TextAnalysis.fitNaiveBayes(
         docs.filter(col("lang") === "en").withColumn("__c", lit("ref")),
         "__c", "text", buckets = 1024)
@@ -2053,7 +1906,7 @@ object SparkEntry {
     * emit the degenerate n_bpe_tokens == n_words).
     */
   private def bpeModel(s: SparkSession, dir: String): graft.ops.Bpe.BpeModel =
-    fittedModel(s"bpe|$dir|merges=90") {
+    Registry.memo(s"bpe|$dir|merges=90") {
       graft.ops.Bpe.train(T(s, dir, "documents"), "text", numMerges = 90)
     }
 
@@ -3179,7 +3032,7 @@ object SparkEntry {
     * batch-SQL exact top-10.
     */
   private def q_stream_heavyhitters(s: SparkSession, dir: String): DataFrame = {
-    val name = s"hh_stream_${registryKey(dir).take(8)}"
+    val name = s"hh_stream_${Registry.key(dir).take(8)}"
     val stream = s.readStream.schema(jsonlSchema).json(jsonlRoot(s, dir))
       .select(col("lang"), explode(graft.ops.Dedup.words(col("text"))).as("w"))
       .groupBy("lang")
@@ -3210,7 +3063,7 @@ object SparkEntry {
     */
   private def q_stream_threshold(s: SparkSession, dir: String): DataFrame = {
     val root = compactMaterialized(s, dir)
-    val name = s"thr_stream_${registryKey(dir).take(8)}"
+    val name = s"thr_stream_${Registry.key(dir).take(8)}"
     val schema = s.read.parquet(root).schema
     val stream = s.readStream.schema(schema).parquet(root)
       .filter(col("value").isNotNull)
@@ -3249,20 +3102,13 @@ object SparkEntry {
     * the watermark, O(horizon), the 100 TB continuous-ingest shape.
     */
   private def q_stream_dedup(s: SparkSession, dir: String): DataFrame = {
-    val root = fittedModel(s"dedupspool|$dir") {
-      val out = s"$registryRoot/dedupspool_${registryKey(
-        s"dedupspool-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
-        val base = E(s, dir).select("event_id", "ts", "event_type", "value")
-        base.unionByName(base.filter(col("event_id") % 13 === 3))
-          .repartition(4) // 4 spool files, one micro-batch
-          .write.mode("overwrite").parquet(out)
-      }
-      out
+    val root = Registry.artifact(s, s"dedupspool-v1|$dir", s"$dir/events.parquet") { out =>
+      val base = E(s, dir).select("event_id", "ts", "event_type", "value")
+      base.unionByName(base.filter(col("event_id") % 13 === 3))
+        .repartition(4) // 4 spool files, one micro-batch
+        .write.mode("overwrite").parquet(out)
     }
-    val name = s"dedup_stream_${registryKey(dir).take(8)}"
+    val name = s"dedup_stream_${Registry.key(dir).take(8)}"
     val stream = s.readStream.schema(s.read.parquet(root).schema).parquet(root)
     val deduped = graft.streaming.Streams.dedup(
       stream, "ts", Seq("event_id"), "30 minutes")
@@ -3383,7 +3229,7 @@ object SparkEntry {
           .cast("double").as("f_nospace"),
         when(col("lang") === "en", 1).otherwise(-1).as("y"))
     val fcols = Seq("f_chars", "f_words", "f_distinct", "f_stop", "f_nospace")
-    val model = fittedModel(s"adaboost/$dir") {
+    val model = Registry.memo(s"adaboost/$dir") {
       graft.ml.AdaBoost.fit(feats, fcols, "y", rounds = 10, bins = 32)
     }
     // publish the fitted stump literals for the oracle dump: the margin
@@ -3427,7 +3273,7 @@ object SparkEntry {
     val tags = Seq("click", "view", "purchase")
     val wide = Timeseries.align(E(s, dir), "ts", "event_type", "value",
       tags, "1 hour").na.drop("any", tags)
-    val model = fittedModel(s"iforest/$dir") {
+    val model = Registry.memo(s"iforest/$dir") {
       graft.ml.IsolationForest.fit(wide, tags, "bucket")
     }
     publishOracle("ml_isolation_forest",
@@ -3475,7 +3321,7 @@ object SparkEntry {
     val wide = Timeseries.align(E(s, dir), "ts", "event_type", "value",
       Seq("click", "view", "purchase"), "1 hour")
       .na.drop("any", Seq("click", "view", "purchase"))
-    val model = fittedModel(s"aesgd|$dir") {
+    val model = Registry.memo(s"aesgd|$dir") {
       graft.ml.AutoEncoderSGD.fit(wide, Seq("click", "view", "purchase"),
         hidden = 8, epochs = 60)
     }
@@ -3511,7 +3357,7 @@ object SparkEntry {
     // epochs=40: the warm start IS the ELM optimum, so the descent only
     // refines — and each epoch is one Spark job over the small embedded
     // series, so epoch count ≈ cold seconds here
-    val model = fittedModel(s"aeseq|$dir") {
+    val model = Registry.memo(s"aeseq|$dir") {
       graft.ml.SequenceAE.fit(wide, tags, lb = 4, orderCol = "bucket",
         hidden = 12, epochs = 40)
     }
@@ -3550,10 +3396,9 @@ object SparkEntry {
     // the restore-best guard makes more epochs refinement, not risk.
     // Persisted via the fingerprinted registry (the simsearch_ivf
     // discipline) so a cold process pays a file read, not 25 jobs.
-    val fp = tableFingerprint(s, s"$dir/events.parquet")
-    val key = registryKey(s"gruae-v1|$dir|$fp|lb=4|h=8|ep=25|seed=42")
-    val model = fittedModel(s"gruae|$dir") {
-      graft.ml.RnnAutoEncoder.fitOrLoad(s"$registryRoot/gruae_$key.txt",
+    val model = Registry.memo(s"gruae|$dir") {
+      graft.ml.RnnAutoEncoder.fitOrLoad(Registry.path(s,
+          s"gruae-v1|$dir|lb=4|h=8|ep=25|seed=42", s"$dir/events.parquet") + ".txt",
         wide, tags, lb = 4, orderCol = "bucket", hidden = 8, epochs = 25)
     }
     publishOracle("ml_rnn_autoencoder", gruOracleSqlFor(model))
@@ -3611,11 +3456,11 @@ object SparkEntry {
     // fit-once, forecast-many (the simsearch_ivf discipline): both fits
     // are seeded and deterministic, so the memoized model is identical to
     // a refit — later executions pay only the forecast scans
-    val esn = fittedModel(s"esn|$dir") {
+    val esn = Registry.memo(s"esn|$dir") {
       graft.ml.EchoState.fit(long, Seq("v"), "bucket", Seq("event_type"),
         reservoir = 32, washout = 10)
     }
-    val ar = fittedModel(s"ar3|$dir") {
+    val ar = Registry.memo(s"ar3|$dir") {
       graft.ml.Forecast.fitPerKey(long, "event_type", "v", lb = 3, "bucket")
     }
     publishOracle("esn_forecast", esnOracleSqlFor(esn, ar))
@@ -3730,22 +3575,15 @@ object SparkEntry {
     * phash queries; see [[q_multimodal_phash_dedup]] for why it exists.
     */
   private def phashMediaMaterialized(s: SparkSession, dir: String): String =
-    fittedModel(s"phashmedia|$dir") {
-      val out = s"$registryRoot/phashmedia_${registryKey(
-        s"phashmedia-v1|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
-        val media = Multimodal.fromDigestPng(
-          T(s, dir, "documents"), "doc_id", "text")
-        val originals = Multimodal.resizePayload(media, "bytes", 8.0)
-        val twins = Multimodal.resizePayload(
-          media.filter(col("media_id") % 10 === 0), "bytes", 16.0)
-          .select((col("media_id") + 100000).as("media_id"), col("kind"),
-            col("bytes"), col("meta"))
-        originals.unionByName(twins).write.mode("overwrite").parquet(out)
-      }
-      out
+    Registry.artifact(s, s"phashmedia-v1|$dir", s"$dir/documents.parquet") { out =>
+      val media = Multimodal.fromDigestPng(
+        T(s, dir, "documents"), "doc_id", "text")
+      val originals = Multimodal.resizePayload(media, "bytes", 8.0)
+      val twins = Multimodal.resizePayload(
+        media.filter(col("media_id") % 10 === 0), "bytes", 16.0)
+        .select((col("media_id") + 100000).as("media_id"), col("kind"),
+          col("bytes"), col("meta"))
+      originals.unionByName(twins).write.mode("overwrite").parquet(out)
     }
 
   /** Registry path of the FULL-corpus aHash table (the published decode
@@ -3753,15 +3591,9 @@ object SparkEntry {
     */
   private def phashHashesMaterialized(s: SparkSession, dir: String): String = {
     val mediaPath = phashMediaMaterialized(s, dir)
-    fittedModel(s"phashhash|$dir") {
-      val out = s"$registryRoot/phashhash_${registryKey(
-        s"phashhash-v1|$dir|${tableFingerprint(s, mediaPath)}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker))
-        Multimodal.averageHashes(s.read.parquet(mediaPath), "media_id", "bytes")
-          .write.mode("overwrite").parquet(out)
-      out
+    Registry.artifact(s, s"phashhash-v1|$dir", mediaPath) { out =>
+      Multimodal.averageHashes(s.read.parquet(mediaPath), "media_id", "bytes")
+        .write.mode("overwrite").parquet(out)
     }
   }
 
@@ -3816,21 +3648,14 @@ object SparkEntry {
   private def q_multimodal_phash_incr(s: SparkSession, dir: String): DataFrame = {
     assertTwinIdHeadroom(s, dir)
     val mediaPath = phashMediaMaterialized(s, dir)
-    val statePath = fittedModel(s"phashbase|$dir") {
-      val out = s"$registryRoot/phashbase_${registryKey(
-        s"phashbase-v1|mod7|$dir|${tableFingerprint(s, mediaPath)}")}"
-      // pairs' _SUCCESS commits LAST so a half-written state never gates
-      val marker = new org.apache.hadoop.fs.Path(s"$out/pairs", "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
-        val baseHashes = Multimodal.averageHashes(
-          s.read.parquet(mediaPath).filter(col("media_id") % 7 =!= 3),
-          "media_id", "bytes").localCheckpoint()
-        baseHashes.write.mode("overwrite").parquet(s"$out/hashes")
-        Multimodal.phashPairsFromHashes(baseHashes, 3)
-          .write.mode("overwrite").parquet(s"$out/pairs")
-      }
-      out
+    val statePath = Registry.artifact(s, s"phashbase-v1|mod7|$dir", mediaPath,
+        "hashes", "pairs") { out =>
+      val baseHashes = Multimodal.averageHashes(
+        s.read.parquet(mediaPath).filter(col("media_id") % 7 =!= 3),
+        "media_id", "bytes").localCheckpoint()
+      baseHashes.write.mode("overwrite").parquet(s"$out/hashes")
+      Multimodal.phashPairsFromHashes(baseHashes, 3)
+        .write.mode("overwrite").parquet(s"$out/pairs")
     }
     publishOracle("multimodal_phash_incr",
       phashPairsOracle(phashHashesMaterialized(s, dir)))
@@ -3853,14 +3678,8 @@ object SparkEntry {
     * hash-fails the query.
     */
   private def q_scan_orc(s: SparkSession, dir: String): DataFrame = {
-    val root = fittedModel(s"orc|$dir") {
-      val out = s"$registryRoot/orc_${registryKey(
-        s"orc-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker))
-        E(s, dir).write.mode("overwrite").orc(out)
-      out
+    val root = Registry.artifact(s, s"orc-v1|$dir", s"$dir/events.parquet") { out =>
+      E(s, dir).write.mode("overwrite").orc(out)
     }
     s.read.orc(root)
       .groupBy("event_type")
@@ -3879,22 +3698,15 @@ object SparkEntry {
     * sink boundary, since the aggregate reads the persisted files.
     */
   private def q_sink_upsert(s: SparkSession, dir: String): DataFrame = {
-    val root = fittedModel(s"upsert|$dir") {
-      val out = s"$registryRoot/upsert_${registryKey(
-        s"upsert-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
-        val base = E(s, dir)
-        val updates = base.filter(col("event_id") % 7 === 0)
-          .withColumn("value", col("value") + lit(1000.0))
-          .unionByName(base.filter(col("event_id") % 97 === 0)
-            .withColumn("event_id", col("event_id") + lit(1000000L))
-            .withColumn("event_type", lit("backfill")))
-        graft.ops.Lake.upsert(base, updates, Seq("event_id"))
-          .write.mode("overwrite").parquet(out)
-      }
-      out
+    val root = Registry.artifact(s, s"upsert-v1|$dir", s"$dir/events.parquet") { out =>
+      val base = E(s, dir)
+      val updates = base.filter(col("event_id") % 7 === 0)
+        .withColumn("value", col("value") + lit(1000.0))
+        .unionByName(base.filter(col("event_id") % 97 === 0)
+          .withColumn("event_id", col("event_id") + lit(1000000L))
+          .withColumn("event_type", lit("backfill")))
+      graft.ops.Lake.upsert(base, updates, Seq("event_id"))
+        .write.mode("overwrite").parquet(out)
     }
     s.read.parquet(root)
       .groupBy("event_type")
@@ -3919,24 +3731,18 @@ object SparkEntry {
     * written bucketed-by-key (sink_partitioned's layout note).
     */
   private def q_sink_time_travel(s: SparkSession, dir: String): DataFrame = {
-    val root = fittedModel(s"timetravel|$dir") {
-      val out = s"$registryRoot/timetravel_${registryKey(
-        s"timetravel-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(s"$out/v2", "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
-        E(s, dir).select("event_id", "event_type", "value")
-          .write.mode("overwrite").parquet(s"$out/v1")
-        val v1 = s.read.parquet(s"$out/v1")
-        val cdc = v1.filter(col("event_id") % 11 === 3)
-            .withColumn("value", col("value") * 2.0)
-          .unionByName(v1.filter(col("event_id") % 101 === 0)
-            .withColumn("event_id", col("event_id") + lit(2000000L))
-            .withColumn("event_type", lit("lateload")))
-        graft.ops.Lake.upsert(v1, cdc, Seq("event_id"))
-          .write.mode("overwrite").parquet(s"$out/v2")
-      }
-      out
+    val root = Registry.artifact(s, s"timetravel-v1|$dir", s"$dir/events.parquet",
+        "v1", "v2") { out =>
+      E(s, dir).select("event_id", "event_type", "value")
+        .write.mode("overwrite").parquet(s"$out/v1")
+      val v1 = s.read.parquet(s"$out/v1")
+      val cdc = v1.filter(col("event_id") % 11 === 3)
+          .withColumn("value", col("value") * 2.0)
+        .unionByName(v1.filter(col("event_id") % 101 === 0)
+          .withColumn("event_id", col("event_id") + lit(2000000L))
+          .withColumn("event_type", lit("lateload")))
+      graft.ops.Lake.upsert(v1, cdc, Seq("event_id"))
+        .write.mode("overwrite").parquet(s"$out/v2")
     }
     val v1 = s.read.parquet(s"$root/v1")
       .select(col("event_id"), col("value").as("v_old"), lit(1).as("in_old"))
@@ -4033,20 +3839,13 @@ object SparkEntry {
     * or a half-parsed good line both break the counts.
     */
   private def q_scan_jsonl_corrupt(s: SparkSession, dir: String): DataFrame = {
-    val root = fittedModel(s"jsonlcorrupt|$dir") {
-      val out = s"$registryRoot/jsonlcorrupt_${registryKey(
-        s"jsonlcorrupt-v1|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
-        T(s, dir, "documents")
-          .select(col("doc_id"), to_json(struct(col("doc_id"), col("text"),
-            col("lang"), col("source"), col("n_chars"))).as("j"))
-          .select(when(col("doc_id") % 17 === 3, substring(col("j"), 1, 25))
-            .otherwise(col("j")).as("value"))
-          .write.mode("overwrite").text(out)
-      }
-      out
+    val root = Registry.artifact(s, s"jsonlcorrupt-v1|$dir", s"$dir/documents.parquet") { out =>
+      T(s, dir, "documents")
+        .select(col("doc_id"), to_json(struct(col("doc_id"), col("text"),
+          col("lang"), col("source"), col("n_chars"))).as("j"))
+        .select(when(col("doc_id") % 17 === 3, substring(col("j"), 1, 25))
+          .otherwise(col("j")).as("value"))
+        .write.mode("overwrite").text(out)
     }
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       s"$jsonlSchema, _bad STRING")
@@ -4072,26 +3871,19 @@ object SparkEntry {
     * edge or landed as many bounded files, exactly as materialized here.
     */
   private def q_scan_json_multiline(s: SparkSession, dir: String): DataFrame = {
-    val root = fittedModel(s"jsonml|$dir") {
-      val out = s"$registryRoot/jsonml_${registryKey(
-        s"jsonml-v1|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
-        T(s, dir, "documents")
-          // one JSON array file per core: derived from defaultParallelism,
-          // not a local[32] literal — on a 1000-executor cluster the file
-          // count (= whole-file-parse task count) scales with the cluster
-          .repartition(s.sparkContext.defaultParallelism)
-          .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
-            col("source"), col("n_chars"))).as("j"))
-          .mapPartitions { rows =>
-            // one JSON ARRAY document per partition file
-            Iterator(rows.map(_.getString(0)).mkString("[\n", ",\n", "\n]"))
-          }(org.apache.spark.sql.Encoders.STRING)
-          .write.mode("overwrite").text(out)
-      }
-      out
+    val root = Registry.artifact(s, s"jsonml-v1|$dir", s"$dir/documents.parquet") { out =>
+      T(s, dir, "documents")
+        // one JSON array file per core: derived from defaultParallelism,
+        // not a local[32] literal — on a 1000-executor cluster the file
+        // count (= whole-file-parse task count) scales with the cluster
+        .repartition(s.sparkContext.defaultParallelism)
+        .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
+          col("source"), col("n_chars"))).as("j"))
+        .mapPartitions { rows =>
+          // one JSON ARRAY document per partition file
+          Iterator(rows.map(_.getString(0)).mkString("[\n", ",\n", "\n]"))
+        }(org.apache.spark.sql.Encoders.STRING)
+        .write.mode("overwrite").text(out)
     }
     s.read.schema(org.apache.spark.sql.types.StructType.fromDDL(jsonlSchema))
       .option("multiLine", "true")
@@ -4113,22 +3905,15 @@ object SparkEntry {
     * single multi-GB .gz serializes the whole scan).
     */
   private def q_scan_jsonl_gz(s: SparkSession, dir: String): DataFrame = {
-    val root = fittedModel(s"jsonlgz|$dir") {
-      val out = s"$registryRoot/jsonlgz_${registryKey(
-        s"jsonlgz-v1|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
-        T(s, dir, "documents")
-          .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
-            col("source"), col("n_chars"))).as("value"))
-          // parallelism = .gz file count (non-splittable); derived from
-          // defaultParallelism so a real cluster writes cluster-wide files
-          .repartition(s.sparkContext.defaultParallelism)
-          .write.mode("overwrite")
-          .option("compression", "gzip").text(out)
-      }
-      out
+    val root = Registry.artifact(s, s"jsonlgz-v1|$dir", s"$dir/documents.parquet") { out =>
+      T(s, dir, "documents")
+        .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
+          col("source"), col("n_chars"))).as("value"))
+        // parallelism = .gz file count (non-splittable); derived from
+        // defaultParallelism so a real cluster writes cluster-wide files
+        .repartition(s.sparkContext.defaultParallelism)
+        .write.mode("overwrite")
+        .option("compression", "gzip").text(out)
     }
     s.read.schema(org.apache.spark.sql.types.StructType.fromDDL(jsonlSchema))
       .json(root)
@@ -4576,21 +4361,14 @@ object SparkEntry {
     val base = E(s, dir)
     // v2: range-ordered CDC files — each micro-batch (one file) covers a
     // contiguous id range, the locality a partition-pruned merge exploits
-    val updatesDir = fittedModel(s"upsertcdc2|$dir") {
-      val out = s"$registryRoot/upsertcdc_${registryKey(
-        s"upsertcdc-v2|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
-        base.filter(col("event_id") % 7 === 0)
-          .withColumn("value", col("value") + lit(1000.0))
-          .unionByName(base.filter(col("event_id") % 97 === 0)
-            .withColumn("event_id", col("event_id") + lit(1000000L))
-            .withColumn("event_type", lit("backfill")))
-          .repartitionByRange(4, col("event_id")) // 4 files -> 4 micro-batches
-          .write.mode("overwrite").parquet(out)
-      }
-      out
+    val updatesDir = Registry.artifact(s, s"upsertcdc-v2|$dir", s"$dir/events.parquet") { out =>
+      base.filter(col("event_id") % 7 === 0)
+        .withColumn("value", col("value") + lit(1000.0))
+        .unionByName(base.filter(col("event_id") % 97 === 0)
+          .withColumn("event_id", col("event_id") + lit(1000000L))
+          .withColumn("event_type", lit("backfill")))
+        .repartitionByRange(4, col("event_id")) // 4 files -> 4 micro-batches
+        .write.mode("overwrite").parquet(out)
     }
     // Table lives for this invocation in a temp dir (tmpfs-preferring,
     // deleted at JVM exit); __p = event_id div width is the partition
@@ -4789,7 +4567,7 @@ object SparkEntry {
     val pcaModel = graft.ml.PcaAnomaly.fit(wide, tags, k = 2)
     val pca = pcaModel.score(wide)
       .select(col("bucket"), col("anomaly_score").as("s_pca"))
-    val forestModel = fittedModel(s"iforest/$dir") {
+    val forestModel = Registry.memo(s"iforest/$dir") {
       graft.ml.IsolationForest.fit(wide, tags, "bucket")
     }
     publishOracle("ml_anomaly_ensemble",
@@ -4904,7 +4682,7 @@ object SparkEntry {
     */
   private def q_stream_ohlc(s: SparkSession, dir: String): DataFrame = {
     val root = compactMaterialized(s, dir)
-    val name = s"ohlc_stream_${registryKey(dir).take(8)}"
+    val name = s"ohlc_stream_${Registry.key(dir).take(8)}"
     val schema = s.read.parquet(root).schema
     val ord = struct(col("ts").as("t"), col("event_id").as("id"),
       col("value").as("v"))
@@ -4931,7 +4709,7 @@ object SparkEntry {
     */
   private def q_stream_sliding(s: SparkSession, dir: String): DataFrame = {
     val root = compactMaterialized(s, dir)
-    val name = s"slide_stream_${registryKey(dir).take(8)}"
+    val name = s"slide_stream_${Registry.key(dir).take(8)}"
     val schema = s.read.parquet(root).schema
     val stream = s.readStream.schema(schema).parquet(root)
       .filter(col("value").isNotNull)
@@ -4964,7 +4742,7 @@ object SparkEntry {
       .agg((sum(col("value").cast("decimal(18,6)")) * lit(1000000L))
           .cast("long").as("sp"), count(lit(1)).as("pn"))
       .select(col("event_type"), col("hod"), expr("sp div pn").as("p6"))
-    val name = s"seasonal_stream_${registryKey(dir).take(8)}"
+    val name = s"seasonal_stream_${Registry.key(dir).take(8)}"
     val schema = s.read.parquet(root).schema
     val liveStream = s.readStream.schema(schema).parquet(root)
       .filter(!driftIsA && col("value").isNotNull)
@@ -5417,7 +5195,7 @@ object SparkEntry {
       sum(col("x") * col("x")).as("sxx"),
       sum(col("y") * col("y")).as("syy"),
       sum(col("x") * col("y")).as("sxy"))
-    val name = s"maha_stream_${registryKey(dir).take(8)}"
+    val name = s"maha_stream_${Registry.key(dir).take(8)}"
     val schema = s.read.parquet(root).schema
     val liveAgg = s.readStream.schema(schema).parquet(root)
       .filter(!driftIsA && col("value").isNotNull &&
@@ -5752,25 +5530,18 @@ object SparkEntry {
     // comparability across days). Persist both fingerprint-keyed, so a
     // serving run pays a model-sized parquet read (|keys| + |keys|×bins
     // rows), not a rescan of the reference history.
-    val refRoot = fittedModel(s"driftref|$dir") {
-      val out = s"$registryRoot/driftref_${registryKey(
-        s"driftref-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
-        val ref = s.read.parquet(root).filter(driftIsA)
-        val rng = graft.ops.Drift.referenceRanges(ref, "event_type", "value")
-        graft.ops.Drift.binAgainst(ref, "event_type", "value", rng)
-          .groupBy("event_type", "__bin").agg(count(lit(1)).as("__na"))
-          .join(rng, Seq("event_type"))
-          .coalesce(1).write.mode("overwrite").parquet(out)
-      }
-      out
+    val refRoot = Registry.artifact(s, s"driftref-v1|$dir", s"$dir/events.parquet") { out =>
+      val ref = s.read.parquet(root).filter(driftIsA)
+      val rng = graft.ops.Drift.referenceRanges(ref, "event_type", "value")
+      graft.ops.Drift.binAgainst(ref, "event_type", "value", rng)
+        .groupBy("event_type", "__bin").agg(count(lit(1)).as("__na"))
+        .join(rng, Seq("event_type"))
+        .coalesce(1).write.mode("overwrite").parquet(out)
     }
     val frozen = s.read.parquet(refRoot)
     val ranges = frozen.select("event_type", "__mn", "__mx").distinct()
     val refHist = frozen.select("event_type", "__bin", "__na")
-    val name = s"drift_stream_${registryKey(dir).take(8)}"
+    val name = s"drift_stream_${Registry.key(dir).take(8)}"
     val schema = s.read.parquet(root).schema
     val liveStream = graft.ops.Drift.binAgainst(
         s.readStream.schema(schema).parquet(root).filter(!driftIsA),
@@ -6175,7 +5946,7 @@ object SparkEntry {
     */
   private def q_ml_gmm(s: SparkSession, dir: String): DataFrame = {
     val ev = E(s, dir).filter(col("value").isNotNull && !isnan(col("value")))
-    val fit = fittedModel(s"gmm3|$dir") {
+    val fit = Registry.memo(s"gmm3|$dir") {
       graft.ml.GmmEm.fit(ev, "event_type", "value", k = 3, iters = 12)
     }
     val lls = fit.logLik
@@ -6487,7 +6258,7 @@ object SparkEntry {
     */
   private def q_stream_tdigest(s: SparkSession, dir: String): DataFrame = {
     val root = compactMaterialized(s, dir)
-    val name = s"tdig_stream_${registryKey(dir).take(8)}"
+    val name = s"tdig_stream_${Registry.key(dir).take(8)}"
     val schema = s.read.parquet(root).schema
     val stream = s.readStream.schema(schema).parquet(root)
       .filter(col("value").isNotNull)
@@ -7220,17 +6991,11 @@ object SparkEntry {
     * no shuffle.
     */
   private def q_stream_geo_fence(s: SparkSession, dir: String): DataFrame = {
-    val root = fittedModel(s"fencespool|$dir") {
-      val out = s"$registryRoot/fencespool_${registryKey(
-        s"fencespool-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker))
-        E(s, dir).filter(col("event_type") === "purchase")
-          .select("event_id", "user_id")
-          .repartition(4) // 4 spool files, one micro-batch
-          .write.mode("overwrite").parquet(out)
-      out
+    val root = Registry.artifact(s, s"fencespool-v1|$dir", s"$dir/events.parquet") { out =>
+      E(s, dir).filter(col("event_type") === "purchase")
+        .select("event_id", "user_id")
+        .repartition(4) // 4 spool files, one micro-batch
+        .write.mode("overwrite").parquet(out)
     }
     val (ula, ulo) = geoE4("u", col("user_id"))
     val pts = s.readStream.schema(s.read.parquet(root).schema).parquet(root)
@@ -7239,7 +7004,7 @@ object SparkEntry {
     val hits = pts.join(broadcast(trisCellDim(s, dir)), Seq("cx", "cy"))
       .filter(insideTri)
       .select(col("event_id"), col("user_id"), col("tri_id"))
-    val name = s"geo_fence_${registryKey(dir).take(8)}"
+    val name = s"geo_fence_${Registry.key(dir).take(8)}"
     graft.streaming.Streams.replayToTable(hits, name, "append")
       .orderBy("event_id", "tri_id")
   }

@@ -1,8 +1,6 @@
 package graft.ml
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
-import java.security.MessageDigest
 
 /** Content-addressed build cache — the analogue of the reference's
   * `builder/build_model.py::provide_saved_model` +
@@ -17,10 +15,7 @@ class DiskRegistry(root: Path) {
   /** Stable cache key for a config string (the reference uses md5 of
     * model+data config + version).
     */
-  def key(config: String): String =
-    MessageDigest.getInstance("MD5")
-      .digest(config.getBytes(StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
+  def key(config: String): String = graft.Registry.key(config)
 
   private def entry(k: String): Path = root.resolve(k)
 

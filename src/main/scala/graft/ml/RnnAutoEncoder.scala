@@ -538,18 +538,25 @@ object RnnAutoEncoder {
 
   /** Persist a fitted model as one small text artifact (Double.toString
     * round-trips exactly, so load(save(m)) is bit-identical). Driver-side
-    * only — the model is O(h·(d+h)) doubles.
+    * only — the model is O(h·(d+h)) doubles. Atomic: the text goes to a
+    * temp sibling that is renamed into place, so a save killed part-way
+    * never leaves a truncated model at `path` for [[fitOrLoad]] to load.
     */
   def save(m: GruAeModel, path: String): Unit = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
     val sb = new StringBuilder
     sb.append(m.baseTags.mkString(",")).append('\n')
     sb.append(s"${m.lb} ${m.orderCol} ${m.hidden} ${m.threshold}\n")
     sb.append(m.means.mkString(" ")).append('\n')
     sb.append(m.stds.mkString(" ")).append('\n')
     sb.append(m.theta.mkString(" ")).append('\n')
-    val p = java.nio.file.Paths.get(path)
-    if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-    java.nio.file.Files.writeString(p, sb.toString)
+    val p = Paths.get(path).toAbsolutePath
+    Files.createDirectories(p.getParent)
+    val tmp = Files.createTempFile(p.getParent, s"${p.getFileName}.", ".tmp")
+    try {
+      Files.writeString(tmp, sb.toString)
+      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
   }
 
   def load(path: String): GruAeModel = {
@@ -566,6 +573,7 @@ object RnnAutoEncoder {
     * fit and persist — the fit-once-across-PROCESSES discipline
     * (simsearch_ivf's), so a cold JVM pays only the file read when the
     * caller's key (which must include a data fingerprint) is unchanged.
+    * [[save]] is atomic, so an existing file is a complete model.
     */
   def fitOrLoad(path: String, train: => DataFrame, tags: Seq[String],
       lb: Int = 4, orderCol: String = "bucket", hidden: Int = 8,

@@ -1082,22 +1082,18 @@ object Dedup {
     loadShingleIndex(spark, path)
   }
 
+  /** The components every saved index commits: meta commits LAST in both
+    * writers (round 15 — previously docs, and pre-r15 artifacts committed
+    * meta first), so an index counts as built only with both markers.
+    */
+  val ShingleIndexParts: Seq[String] = Seq("meta", "docs")
+
   def shingleIndexExists(spark: org.apache.spark.sql.SparkSession,
-      path: String): Boolean = {
-    // meta commits LAST in both writers (round 15 — previously docs;
-    // every v3 artifact has meta, verified across the live registry
-    // before the switch), so this is the never-gate-a-half-index marker
-    val p = new org.apache.hadoop.fs.Path(s"$path/meta", "_SUCCESS")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+      path: String): Boolean =
+    graft.Registry.committed(spark, path, ShingleIndexParts: _*)
 
   def loadShingleIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): ShingleIndex = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    def committed(sub: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/$sub", "_SUCCESS")
-      p.getFileSystem(conf).exists(p)
-    }
     // meta/pairs are optional on disk (pre-v3 artifacts; indexes past
     // the pair-economics guard) — absence degrades to the per-serve
     // stats agg / recompute plans, never to an error
@@ -1105,11 +1101,12 @@ object Dedup {
     // pair-state serve never consults the stats, so loading must not
     // pay for them
     val st: () => Option[ShingleStats] = () =>
-      if (committed("meta")) {
+      if (graft.Registry.committed(spark, path, "meta")) {
         val r = spark.read.parquet(s"$path/meta").head()
         Some(ShingleStats(r.getAs[Long]("mentions"), r.getAs[Long]("memberships")))
       } else None
-    val ps = if (committed("pairs")) Some(spark.read.parquet(s"$path/pairs"))
+    val ps =
+      if (graft.Registry.committed(spark, path, "pairs")) Some(spark.read.parquet(s"$path/pairs"))
       else None
     ShingleIndex(spark.read.parquet(s"$path/groups"),
       spark.read.parquet(s"$path/docs"), st, ps)

@@ -202,8 +202,8 @@ object Similarity {
       centroids.toDF("cluster", "cvec")
     }
 
-    /** Persist the quantizer as parquet at `path` (atomic via Spark's
-      * `_SUCCESS` commit marker — `load` keys off it).
+    /** Persist the quantizer as parquet at `path` (committed by Spark's
+      * `_SUCCESS` marker — [[fitOrLoadIvf]] keys off it).
       */
     def save(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
       toDF(spark).coalesce(1).write.mode("overwrite").parquet(path)
@@ -217,20 +217,7 @@ object Similarity {
 
     def load(spark: org.apache.spark.sql.SparkSession, path: String): IvfModel =
       fromDF(spark.read.parquet(path))
-
-    /** True iff a COMMITTED save exists at `path` (`_SUCCESS` present —
-      * a half-written directory from a killed job does not count).
-      */
-    def exists(spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
   }
-
-  /** Process-level cache of fitted quantizers, keyed by artifact path —
-    * repeated searches in one JVM never re-read (let alone re-fit).
-    */
-  private val ivfModels = new java.util.concurrent.ConcurrentHashMap[String, IvfModel]()
 
   /** The "fit once, search many" production shape: load the quantizer
     * persisted at `path`, or fit it from `corpus`, persist, and return it.
@@ -242,28 +229,18 @@ object Similarity {
     * (`builder/build_model.py::provide_saved_model`, public repo — mount
     * empty, SURVEY.md §0).
     *
-    * The cache is keyed by `path` ALONE: callers must encode a data
-    * fingerprint into the path (as SparkEntry's `tableFingerprint` keys
-    * do) or a regenerated corpus will silently be served the stale model.
-    * The fit runs OUTSIDE the map — `computeIfAbsent` would hold the
-    * hash-bin lock across the k-means jobs, blocking concurrent lookups
-    * of unrelated paths that share the bin. Two racing callers may both
-    * fit; the seeded fit is deterministic and `save` overwrites, so
-    * whichever `putIfAbsent` loses just discards an identical model.
+    * The process memo is keyed by `path` ALONE: callers must encode a
+    * data fingerprint into the path (as [[graft.Registry.path]] does) or
+    * a regenerated corpus will silently be served the stale model. Cold
+    * and warm processes serve the same model: the one read back from the
+    * committed save.
     */
   def fitOrLoadIvf(corpus: DataFrame, vecCol: String, path: String,
       nLists: Int = 16, seed: Long = 42L, maxIter: Int = 8): IvfModel = {
-    val cached = ivfModels.get(path)
-    if (cached != null) return cached
     val spark = corpus.sparkSession
-    val m =
-      if (IvfModel.exists(spark, path)) IvfModel.load(spark, path)
-      else {
-        val f = fitIvf(corpus, vecCol, nLists, seed, maxIter)
-        f.save(spark, path)
-        f
-      }
-    Option(ivfModels.putIfAbsent(path, m)).getOrElse(m)
+    graft.Registry.memo(s"ivf-model|$path")(IvfModel.load(spark,
+      graft.Registry.commit(spark, path)(
+        fitIvf(corpus, vecCol, nLists, seed, maxIter).save(spark, _))))
   }
 
   /** Fit the IVF quantizer: seeded k-means over the corpus, centroids
@@ -395,11 +372,6 @@ object Similarity {
 
     def load(spark: org.apache.spark.sql.SparkSession, path: String): PqModel =
       fromDF(spark.read.parquet(path))
-
-    def exists(spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
   }
 
   /** Fit the PQ codebooks: m independent seeded k-means fits, one per
@@ -424,19 +396,15 @@ object Similarity {
     PqModel(m, subDim, books)
   }
 
-  /** Process-level PQ model cache + fit-once registry (the fitOrLoadIvf
-    * discipline; callers must fingerprint the path).
+  /** Fit-once PQ codebooks (the [[fitOrLoadIvf]] discipline; callers
+    * must fingerprint the path).
     */
-  private val pqModels = new java.util.concurrent.ConcurrentHashMap[String, PqModel]()
   def fitOrLoadPq(corpus: DataFrame, vecCol: String, path: String,
       m: Int = 8, k: Int = 64, seed: Long = 42L, maxIter: Int = 8): PqModel = {
-    val cached = pqModels.get(path)
-    if (cached != null) return cached
     val spark = corpus.sparkSession
-    val model =
-      if (PqModel.exists(spark, path)) PqModel.load(spark, path)
-      else { val f = fitPq(corpus, vecCol, m, k, seed, maxIter); f.save(spark, path); f }
-    Option(pqModels.putIfAbsent(path, model)).getOrElse(model)
+    graft.Registry.memo(s"pq-model|$path")(PqModel.load(spark,
+      graft.Registry.commit(spark, path)(
+        fitPq(corpus, vecCol, m, k, seed, maxIter).save(spark, _))))
   }
 
   /** PQ top-k: encode the corpus to codes, decode-on-scan, rank with the

@@ -27,23 +27,51 @@ class RegistryFingerprintSpec extends SparkSpec {
       "compact registry key ignored the fixture regeneration — stale artifact risk")
   }
 
+  /** Every main source file except Registry.scala, as (path, text). */
+  private lazy val mainSources: Seq[(String, String)] = {
+    val stream = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    try {
+      import scala.jdk.CollectionConverters._
+      stream.iterator().asScala.toSeq
+        .filter(_.toString.endsWith(".scala"))
+        .filterNot(_.getFileName.toString == "Registry.scala")
+        .map(p => p.toString -> new String(java.nio.file.Files.readAllBytes(p),
+          java.nio.charset.StandardCharsets.UTF_8))
+    } finally stream.close()
+  }
+
   test("all disk-persisted registry keys embed a table fingerprint") {
-    // Static tripwire: any $registryRoot/<kind>_${registryKey(...)} whose
-    // key string lacks tableFingerprint can serve a stale artifact across
-    // fixture regenerations. Scan the source so a NEW persisted artifact
-    // cannot ship without one (the in-memory fittedModel memo keys are
-    // process-scoped and exempt).
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")),
+    // Static tripwire. Registry.path is the one way to mint an artifact
+    // key, and it fingerprints its input table itself; the ways to ship
+    // a key WITHOUT one are a path built by hand under Registry.root or
+    // a disk config hashed with Registry.key directly. (The in-memory
+    // memo keys are process-scoped and exempt.)
+    val registrySrc = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/Registry.scala")),
       java.nio.charset.StandardCharsets.UTF_8)
-    // every registryKey(s"<kind>-v<N>|...") config string feeding a disk path
-    val keyConfig = """registryKey\(\s*s?"([^"]+)"""".r
-    val offenders = keyConfig.findAllMatchIn(src)
-      .map(_.group(1))
-      .filter(cfg => !cfg.contains("tableFingerprint") && !cfg.contains("$fp")
-        && !cfg.contains("bucketed")) // bucketed tables are re-laid-out per process (in-memory catalog)
-      .toList
+    val pathDef = """(?s)def path\(.*?\n  \}""".r.findFirstIn(registrySrc)
+    assert(pathDef.exists(_.contains("fingerprint(s, input)")),
+      s"Registry.path must fingerprint its input: $pathDef")
+    val keyConfig = """Registry\.key\(\s*s?"([^"]+)"""".r
+    val offenders = mainSources.flatMap { case (file, src) =>
+      // the oracle_sql fragments are fixture-keyed by name, not fitted
+      src.linesIterator.filter(l => l.contains("Registry.root") && !l.contains("\"oracle_sql\""))
+        .map(l => s"$file: ${l.trim}") ++
+      keyConfig.findAllMatchIn(src).map(_.group(1))
+        .filterNot(_.contains("bucketed")) // bucketed tables are re-laid-out per process (in-memory catalog)
+        .map(cfg => s"$file: $cfg")
+    }
     assert(offenders.isEmpty,
       s"disk registry keys without a table fingerprint: $offenders")
+  }
+
+  test("registry root, keys and commit markers live only in Registry.scala") {
+    val banned = Seq("registryKey(", "registryRoot", "graft-registry",
+      "GRAFT_REGISTRY_DIR", "\"_SUCCESS\"")
+    val offenders = for {
+      (file, src) <- mainSources
+      b <- banned if src.contains(b)
+    } yield s"$file: $b"
+    assert(offenders.isEmpty, s"registry logic outside graft.Registry: $offenders")
   }
 }

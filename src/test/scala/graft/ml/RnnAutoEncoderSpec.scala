@@ -115,6 +115,23 @@ class RnnAutoEncoderSpec extends SparkSpec {
       s"sequence model must separate scrambled order: clean=$cleanScore scrambled=$scrScore")
   }
 
+  test("save is atomic: no temp file is left, and a stale temp file never gates a load") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("gruae")
+    val (model, _) = fitted
+    val path = dir.resolve("gruae_a.txt")
+    RnnAutoEncoder.save(model, path.toString)
+    assert(Files.list(dir).toArray.toSeq == Seq(path), "save must leave only the model")
+    assert(RnnAutoEncoder.load(path.toString).theta.sameElements(model.theta))
+    // a save killed before its rename leaves only a temp sibling: that
+    // is no model, so fitOrLoad must fit rather than load it
+    val fresh = dir.resolve("gruae_b.txt")
+    Files.writeString(dir.resolve("gruae_b.txt.12345.tmp"), "v\n4 bucket")
+    val m = RnnAutoEncoder.fitOrLoad(fresh.toString, train, Seq("v"),
+      lb = 4, hidden = 4, epochs = 2)
+    assert(RnnAutoEncoder.load(fresh.toString).theta.sameElements(m.theta))
+  }
+
   test("score carries base columns, threshold flags the tail") {
     val (model, _) = fitted
     val scored = model.score(train)
