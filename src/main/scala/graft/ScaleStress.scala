@@ -32,8 +32,9 @@ import org.apache.spark.sql.functions._
   * corpus legitimately outgrows.
   *
   * Usage: `sbt "runMain graft.ScaleStress [baseDir] [replicas]"`.
-  * Artifacts land under target/scale-stress/ (SUCCESS-gated, reused);
-  * results print as one JSON line + a markdown table for BASELINE.md.
+  * Artifacts land under target/scale-stress/ (gated by
+  * [[Registry.commit]], reused); results print as one JSON line + a
+  * markdown table for BASELINE.md.
   */
 object ScaleStress {
 

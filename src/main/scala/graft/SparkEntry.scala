@@ -629,8 +629,8 @@ object SparkEntry {
     */
   private def q_scan_csv(s: SparkSession, dir: String): DataFrame = {
     val (root, types) = Registry.memo(s"csv|$dir") {
-      val csv = Registry.path(s, s"csv-v2|$dir", s"$dir/events.parquet")
-      val out = Registry.commit(s, csv) { out =>
+      val out = Registry.commit(s,
+          Registry.path(s, s"csv-v2|$dir", s"$dir/events.parquet")) { out =>
         // ONE scan: the partitioned text write splits per tag on the
         // executors (a per-tag driver loop would rescan events |tags| times)
         E(s, dir)
@@ -1383,7 +1383,7 @@ object SparkEntry {
   }
 
   /** THE kNN edge table (k = 3, density-scaled LSH) — fingerprint-keyed,
-    * `_SUCCESS`-gated, persisted ONCE per corpus and served to the whole
+    * commit-marker-gated, persisted ONCE per corpus and served to the whole
     * graph family (`graph_cc/bfs/degree/pagerank/triangles/jaccard_nbrs`,
     * `ml_lof`, `simsearch_knn_graph`): before round 12 each of those 8
     * queries re-ran the identical LSH bucket join (~1 s apiece at sf0.1

@@ -996,8 +996,8 @@ object Dedup {
     ShingleIndex(grouped, docSets, st, ps)
   }
 
-  /** Persist an index (groups + pairs + docs + meta parquet; the META
-    * `_SUCCESS` marker commits last — it is the component every v3
+  /** Persist an index (groups + pairs + docs + meta parquet; META's
+    * commit marker is written last — it is the component every v3
     * writer always emits, so a half-written index never gates (round
     * 15: was docs-last, changed so the build can overlap the pairs and
     * docs jobs — see [[buildAndSaveShingleIndex]]). Stats are computed

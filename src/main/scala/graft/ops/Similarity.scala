@@ -203,7 +203,7 @@ object Similarity {
     }
 
     /** Persist the quantizer as parquet at `path` (committed by Spark's
-      * `_SUCCESS` marker — [[fitOrLoadIvf]] keys off it).
+      * commit marker — [[fitOrLoadIvf]] keys off it).
       */
     def save(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
       toDF(spark).coalesce(1).write.mode("overwrite").parquet(path)
