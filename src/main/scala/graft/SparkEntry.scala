@@ -62,54 +62,6 @@ object SparkEntry {
     }
   }
 
-  /** Oracle SQL published at query-run time (the fitted-params
-    * lifecycle): set when the query executes, merged into [[oracleSql]].
-    * Each publish ALSO persists the fragment under
-    * `oracle_sql/<name>.sql` under the registry root, and [[publishedOracles]]
-    * falls back to that file when the in-process value is absent — so a
-    * cold process can dump a generated oracle for a query that ran in an
-    * earlier process (same-fixture staleness is impossible in the driver
-    * flow: Verify always runs the query, overwriting the fragment,
-    * before dumping oracle_sql.json).
-    */
-  private val publishedOracleSql =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Fragment filenames are FIXTURE-KEYED when the runner declares one
-    * (`graft.oracle.fixture`, set by Verify from its sfDir): a query
-    * that THROWS during Verify must not fall back to a fragment fitted
-    * on a different fixture — that fails safe (hash mismatch) but masks
-    * the real error behind a confusing oracle diff. With the key in the
-    * name, a missing run yields a missing fragment → the absent oracle
-    * entry points at the query failure itself. Unkeyed (tests, ad-hoc
-    * sessions): plain `<name>.sql`, same behavior as before.
-    */
-  private def oracleFragmentFile(name: String): java.nio.file.Path = {
-    val fixture = sys.props.get("graft.oracle.fixture")
-      .map(_.replaceAll("[^A-Za-z0-9.]+", "-").stripPrefix("-"))
-    java.nio.file.Paths.get(Registry.root, "oracle_sql",
-      fixture.fold(s"$name.sql")(f => s"$name.$f.sql"))
-  }
-
-  private def publishOracle(name: String, sql: String): Unit = {
-    publishedOracleSql.put(name, sql)
-    try {
-      val f = oracleFragmentFile(name)
-      java.nio.file.Files.createDirectories(f.getParent)
-      java.nio.file.Files.writeString(f, sql)
-    } catch { case _: Exception => () } // fragment persistence is best-effort
-  }
-
-  private def publishedOracles(names: String*): Map[String, String] =
-    names.flatMap { n =>
-      Option(publishedOracleSql.get(n)).orElse {
-        val f = oracleFragmentFile(n)
-        if (java.nio.file.Files.isReadable(f))
-          Some(java.nio.file.Files.readString(f))
-        else None
-      }.map(n -> _)
-    }.toMap
-
   /** events scan with `ts` normalized to a µs timestamp regardless of the
     * fixture generation's physical parquet type (ns-long vs µs — see
     * [[graft.sources.Events]]). DuckDB's CAST(ts AS TIMESTAMP) performs
@@ -1280,10 +1232,8 @@ object SparkEntry {
     * recall vs the brute-force baseline is additionally unit-tested.
     */
   private def q_simsearch_lsh(s: SparkSession, dir: String): DataFrame = {
-    val sched = embSchedule(s, dir)
-    publishOracle("simsearch_lsh", lshOracleSql(sched))
     Similarity.lshCosinePairsSched(T(s, dir, "embeddings"), "vec_id",
-        "embedding", 0.3, sched)
+        "embedding", 0.3, embSchedule(s, dir))
       .orderBy("vec_a", "vec_b")
   }
 
@@ -1299,13 +1249,9 @@ object SparkEntry {
   /** The fixture's per-table bucket-bit schedule
     * ([[graft.ops.Similarity.autoPlanesSchedule]] over the memoized
     * count) — THE parameterization every LSH-family query runs AND
-    * publishes its oracle under (round 14, r13 verdict #6: the r12-era
-    * embAutoPlanes THREW past the 10240-vector floor because the static
-    * 8-plane oracle SQL could not describe a scheduled fixture; now each
-    * query publishes schedule-generated plane literals via
-    * [[publishOracle]], so any fixture size oracle-checks). Below the
-    * floor the schedule is all-8s: plans, oracle text, and hashes are
-    * byte-identical to the static era.
+    * renders its oracle from ([[generatedOracleSql]]: schedule-generated
+    * plane literals, so any fixture size oracle-checks). Below the
+    * 10240-vector floor the schedule is all-8s.
     */
   private def embSchedule(s: SparkSession, dir: String): Seq[Int] =
     Registry.memo(s"embsched|$dir") {
@@ -1322,13 +1268,11 @@ object SparkEntry {
     * pipelines.
     */
   private def q_simsearch_recall_audit(s: SparkSession, dir: String): DataFrame = {
-    val sched = embSchedule(s, dir)
-    publishOracle("simsearch_recall_audit", recallAuditOracle(sched))
     val e = T(s, dir, "embeddings")
     val exact = Similarity.cosinePairs(e, "vec_id", "embedding", 0.4)
       .agg(count(lit(1)).as("n_exact"))
     val approx = Similarity.lshCosinePairsSched(e, "vec_id", "embedding", 0.4,
-      sched)
+      embSchedule(s, dir))
       .agg(count(lit(1)).as("n_lsh"))
     exact.crossJoin(approx)
       .select(col("n_exact"), col("n_lsh"),
@@ -1341,10 +1285,8 @@ object SparkEntry {
     * behind SemDeDup clustering and graph-based ANN. Oracle-checked via
     * inlined plane literals (the simsearch_lsh pattern).
     */
-  private def q_simsearch_knn_graph(s: SparkSession, dir: String): DataFrame = {
-    publishOracle("simsearch_knn_graph", knnGraphOracleSql(embSchedule(s, dir)))
+  private def q_simsearch_knn_graph(s: SparkSession, dir: String): DataFrame =
     knnEdges(s, dir).orderBy("qid", "rnk")
-  }
 
   /** INCREMENTAL kNN-graph maintenance as a driver-gated no-drift check
     * (the dedup_incremental discipline, round 12): yesterday's edge
@@ -1370,7 +1312,6 @@ object SparkEntry {
     // base. knnGraphMergeSched's caller contract requires the merge to
     // run at the base's schedule.
     val sched = embSchedule(s, dir)
-    publishOracle("simsearch_knn_incr", knnGraphOracleSql(sched))
     val basePath = Registry.artifact(s,
         s"knnbase-v2|k=3|sched=${sched.mkString(".")}|mod5|$dir",
         s"$dir/embeddings.parquet") { out =>
@@ -1432,7 +1373,6 @@ object SparkEntry {
     * amortizes at scale; lineage truncated every round).
     */
   private def q_graph_pagerank(s: SparkSession, dir: String): DataFrame = {
-    publishOracle("graph_pagerank", pagerankOracle(embSchedule(s, dir)))
     val edges = knnEdges(s, dir)
       .select(col("qid").as("src"), col("nid").as("dst"))
     val nodes = T(s, dir, "embeddings").select(col("vec_id").as("id"))
@@ -1449,7 +1389,6 @@ object SparkEntry {
     * absent by contract (degree-0 has no coefficient).
     */
   private def q_graph_triangles(s: SparkSession, dir: String): DataFrame = {
-    publishOracle("graph_triangles", trianglesOracle(embSchedule(s, dir)))
     val edges = knnEdges(s, dir)
       .select(col("qid").as("src"), col("nid").as("dst"))
     graft.ops.Graph.triangles(edges)
@@ -1471,7 +1410,6 @@ object SparkEntry {
     * ids only, driver state is nil.
     */
   private def q_graph_cc(s: SparkSession, dir: String): DataFrame = {
-    publishOracle("graph_cc", graphCcOracle(embSchedule(s, dir)))
     val e = T(s, dir, "embeddings")
     val pairs = knnEdges(s, dir)
       .select(col("qid").as("doc_a"), col("nid").as("doc_b"))
@@ -1499,7 +1437,6 @@ object SparkEntry {
     * carries two longs per edge.
     */
   private def q_graph_degree(s: SparkSession, dir: String): DataFrame = {
-    publishOracle("graph_degree", graphDegreeOracle(embSchedule(s, dir)))
     val e = T(s, dir, "embeddings")
     // persisted-parquet input: re-scanning it per agg is cheaper than a
     // localCheckpoint materialization (the pre-r12 checkpoint existed to
@@ -1539,7 +1476,6 @@ object SparkEntry {
     * integer, no tie-breaks needed (min-hop is unique).
     */
   private def q_graph_bfs(s: SparkSession, dir: String): DataFrame = {
-    publishOracle("graph_bfs", graphBfsOracle(embSchedule(s, dir)))
     val e = T(s, dir, "embeddings")
     val dirEdges = knnEdges(s, dir)
       .select(col("qid").as("src"), col("nid").as("dst"))
@@ -1591,7 +1527,6 @@ object SparkEntry {
     * vs existing link).
     */
   private def q_graph_jaccard_nbrs(s: SparkSession, dir: String): DataFrame = {
-    publishOracle("graph_jaccard_nbrs", graphJaccardNbrsOracle(embSchedule(s, dir)))
     val dirEdges = knnEdges(s, dir)
       .select(col("qid").as("src"), col("nid").as("dst"))
     val und = dirEdges
@@ -1634,7 +1569,6 @@ object SparkEntry {
     * the same 100 TB shape as graph_degree.
     */
   private def q_ml_lof(s: SparkSession, dir: String): DataFrame = {
-    publishOracle("ml_lof", lofOracle(embSchedule(s, dir)))
     val edges = knnEdges(s, dir)
       .select(col("qid"), col("nid"), (lit(1.0) - col("cos_sim")).as("dist"))
     val kd = edges.groupBy("qid").agg(max("dist").as("kdist"))
@@ -1666,21 +1600,15 @@ object SparkEntry {
     * jobs.
     *
     * ORACLE-CHECKED (round 11, the dedup_semantic seed-oracle trick):
-    * the persisted centroids are published to the oracle as VALUES
-    * literals ([[ivfOracleEntry]]), and DuckDB re-derives assignment,
+    * the persisted centroids are the oracle's VALUES literals
+    * ([[ivfOracleSqlFor]]), and DuckDB re-derives assignment,
     * probe ranking, and the probe-limited top-k independently — the
     * k-means FIT stays spec'd (SimilaritySpec) and exactness-checked by
     * simsearch_ivf_exact's nProbe=all ≡ brute-force identity.
     */
   private def q_simsearch_ivf(s: SparkSession, dir: String): DataFrame = {
     val e = T(s, dir, "embeddings")
-    val model = ivfModel(s, dir)
-    // publish the served centroids for the oracle dump
-    publishOracle("simsearch_ivf", ivfOracleSqlFor(
-      model.centroids.map { case (id, v) =>
-        s"($id, ${doubleArraySql(v)})"
-      }.mkString(", ")))
-    Similarity.ivfSearch(model, e.filter(col("vec_id") < 10), e,
+    Similarity.ivfSearch(ivfModel(s, dir), e.filter(col("vec_id") < 10), e,
         "vec_id", "embedding", 5, nProbe = 4)
       .select(col("qid"), col("nid"), round(col("cos_sim"), 6).as("cos_sim"), col("rnk"))
       .orderBy("qid", "rnk")
@@ -1703,18 +1631,7 @@ object SparkEntry {
     */
   private def q_simsearch_pq(s: SparkSession, dir: String): DataFrame = {
     val e = T(s, dir, "embeddings")
-    // every fit hyperparameter is IN the key (the IVF discipline): a
-    // changed fit depth must mint a new artifact, never serve a stale one
-    val model = Similarity.fitOrLoadPq(e, "embedding",
-      Registry.path(s, s"pq-v1|$dir|embedding|m=8|k=64|seed=42|maxIter=8",
-        s"$dir/embeddings.parquet"),
-      m = 8, k = 64, seed = 42L, maxIter = 8)
-    // publish the served codebooks for the oracle dump (see ivf)
-    publishOracle("simsearch_pq", pqOracleSqlFor(model.subDim,
-      (for (j <- 0 until model.m; (c, i) <- model.codebooks(j).zipWithIndex)
-        yield s"($j, $i, ${doubleArraySql(c)})")
-        .mkString(", ")))
-    Similarity.pqTopK(model, e.filter(col("vec_id") < 10), e, "vec_id", "embedding", 5)
+    Similarity.pqTopK(pqModel(s, dir), e.filter(col("vec_id") < 10), e, "vec_id", "embedding", 5)
       .select(col("qid"), col("nid"), col("cos_sim"), col("rnk"))
       .orderBy("qid", "rnk")
   }
@@ -1745,6 +1662,16 @@ object SparkEntry {
       Registry.path(s, s"ivf-v1|$dir|embedding|nLists=16|seed=42|maxIter=8",
         s"$dir/embeddings.parquet"),
       nLists = 16, seed = 42L)
+
+  /** The corpus's PQ codebooks. Every fit hyperparameter is IN the key
+    * (the IVF discipline): a changed fit depth must mint a new artifact,
+    * never serve a stale one.
+    */
+  private def pqModel(s: SparkSession, dir: String): Similarity.PqModel =
+    Similarity.fitOrLoadPq(T(s, dir, "embeddings"), "embedding",
+      Registry.path(s, s"pq-v1|$dir|embedding|m=8|k=64|seed=42|maxIter=8",
+        s"$dir/embeddings.parquet"),
+      m = 8, k = 64, seed = 42L, maxIter = 8)
 
   /** Linear interpolation of resample gaps, windowed PER TAG. */
   private def q_win_interpolate(s: SparkSession, dir: String): DataFrame = {
@@ -3213,11 +3140,20 @@ object SparkEntry {
     * 10 (feature, threshold, polarity, α) literals and every feature is
     * an exact integer count — so the oracle re-derives the margin term
     * for term in the same fold order, the sign predictions, and the
-    * confusion counts independently ([[adaboostOracleEntry]]).
+    * confusion counts independently ([[adaboostOracleSqlFor]]).
     */
-  private def q_ml_adaboost(s: SparkSession, dir: String): DataFrame = {
+  private def q_ml_adaboost(s: SparkSession, dir: String): DataFrame =
+    adaboostModel(s, dir).score(adaboostFeatures(s, dir))
+      .groupBy("lang")
+      .agg(count(lit(1)).as("n"),
+        sum(when(col("prediction") === 1, 1L).otherwise(0L)).as("pred_en"),
+        sum(when(col("prediction") === col("y"), 1L).otherwise(0L))
+          .as("correct"))
+      .orderBy("lang")
+
+  private def adaboostFeatures(s: SparkSession, dir: String): DataFrame = {
     val toks = graft.ops.Dedup.words(col("text"))
-    val feats = T(s, dir, "documents")
+    T(s, dir, "documents")
       .select(col("doc_id"), col("lang"),
         col("n_chars").cast("double").as("f_chars"),
         size(toks).cast("double").as("f_words"),
@@ -3228,27 +3164,14 @@ object SparkEntry {
         length(regexp_replace(col("text"), "\\s+", ""))
           .cast("double").as("f_nospace"),
         when(col("lang") === "en", 1).otherwise(-1).as("y"))
-    val fcols = Seq("f_chars", "f_words", "f_distinct", "f_stop", "f_nospace")
-    val model = Registry.memo(s"adaboost/$dir") {
-      graft.ml.AdaBoost.fit(feats, fcols, "y", rounds = 10, bins = 32)
-    }
-    // publish the fitted stump literals for the oracle dump: the margin
-    // is a left-assoc sum of CASE terms in stump order, mirrored exactly
-    publishOracle("ml_adaboost", adaboostOracleSqlFor(model.stumps.map { st =>
-      val f = model.features(st.feature)
-      s"(CASE WHEN $f > CAST('${st.threshold}' AS DOUBLE) " +
-        s"THEN CAST('${st.polarity}' AS DOUBLE) " +
-        s"ELSE CAST('${-st.polarity}' AS DOUBLE) END) " +
-        s"* CAST('${st.alpha}' AS DOUBLE)"
-    }.mkString(" + ")))
-    model.score(feats)
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("prediction") === 1, 1L).otherwise(0L)).as("pred_en"),
-        sum(when(col("prediction") === col("y"), 1L).otherwise(0L))
-          .as("correct"))
-      .orderBy("lang")
   }
+
+  private def adaboostModel(s: SparkSession, dir: String): graft.ml.AdaBoostModel =
+    Registry.memo(s"adaboost/$dir") {
+      graft.ml.AdaBoost.fit(adaboostFeatures(s, dir),
+        Seq("f_chars", "f_words", "f_distinct", "f_stop", "f_nospace"), "y",
+        rounds = 10, bins = 32)
+    }
 
   /** ISOLATION FOREST anomaly detection (Liu et al. 2008) over the
     * aligned hourly streams — the ensemble detector beside the
@@ -3269,20 +3192,27 @@ object SparkEntry {
     * are u01-random within each feature range, so no fixture value sits
     * within avg()'s ~1e-13 engine skew of one; the fit stays spec'd.
     */
-  private def q_ml_isolation_forest(s: SparkSession, dir: String): DataFrame = {
-    val tags = Seq("click", "view", "purchase")
-    val wide = Timeseries.align(E(s, dir), "ts", "event_type", "value",
-      tags, "1 hour").na.drop("any", tags)
-    val model = Registry.memo(s"iforest/$dir") {
-      graft.ml.IsolationForest.fit(wide, tags, "bucket")
-    }
-    publishOracle("ml_isolation_forest",
-      isoForestOracleSqlFor(isoForestBits(model)))
-    model.anomaly(wide, "bucket")
+  private def q_ml_isolation_forest(s: SparkSession, dir: String): DataFrame =
+    iforestModel(s, dir).anomaly(hourlyTags(s, dir), "bucket")
       .select(col("bucket"), round(col("anomaly_score"), 6).as("anomaly_score"),
         col("anomalous"))
       .orderBy("bucket")
+
+  /** The (click, view, purchase) hourly-aligned frame with incomplete
+    * buckets dropped — the training and scoring input of every
+    * tag-anomaly model below.
+    */
+  private def hourlyTags(s: SparkSession, dir: String): DataFrame = {
+    val tags = Seq("click", "view", "purchase")
+    Timeseries.align(E(s, dir), "ts", "event_type", "value", tags, "1 hour")
+      .na.drop("any", tags)
   }
+
+  private def iforestModel(s: SparkSession, dir: String): graft.ml.IsolationForestModel =
+    Registry.memo(s"iforest/$dir") {
+      graft.ml.IsolationForest.fit(hourlyTags(s, dir),
+        Seq("click", "view", "purchase"), "bucket")
+    }
 
   /** NONLINEAR trainable autoencoder (KerasAutoEncoder analogue) —
     * random tanh encoder + ridge-trained decoder fitted in one
@@ -3293,18 +3223,17 @@ object SparkEntry {
     * standardize, 16 tanh units, linear decode, L2 error — in the same
     * ascending accumulation order; the ridge SOLVE stays spec'd.
     */
-  private def q_ml_autoencoder(s: SparkSession, dir: String): DataFrame = {
-    val wide = Timeseries.align(E(s, dir), "ts", "event_type", "value",
-      Seq("click", "view", "purchase"), "1 hour")
-      .na.drop("any", Seq("click", "view", "purchase"))
-    val model = graft.ml.AutoEncoder.fit(wide, Seq("click", "view", "purchase"),
-      hidden = 16)
-    publishOracle("ml_autoencoder", rfaeOracleSqlFor("ml_autoencoder", model))
-    model.anomaly(wide)
+  private def q_ml_autoencoder(s: SparkSession, dir: String): DataFrame =
+    rfaeModel(s, dir).anomaly(hourlyTags(s, dir))
       .select(col("bucket"), round(col("anomaly_score"), 6).as("anomaly_score"),
         col("anomalous"))
       .orderBy("bucket")
-  }
+
+  private def rfaeModel(s: SparkSession, dir: String): graft.ml.AutoEncoder.RfaeModel =
+    Registry.memo(s"rfae|$dir") {
+      graft.ml.AutoEncoder.fit(hourlyTags(s, dir), Seq("click", "view", "purchase"),
+        hidden = 16)
+    }
 
   /** GRADIENT-trained autoencoder (the KerasAutoEncoder
     * backprop analogue) — both layers trained by distributed mini-batch
@@ -3317,21 +3246,17 @@ object SparkEntry {
     * spec'd, but the fitted weights publish as exact literals and the
     * serving pass replays in SQL via [[rfaeForwardSql]].
     */
-  private def q_ml_autoencoder_sgd(s: SparkSession, dir: String): DataFrame = {
-    val wide = Timeseries.align(E(s, dir), "ts", "event_type", "value",
-      Seq("click", "view", "purchase"), "1 hour")
-      .na.drop("any", Seq("click", "view", "purchase"))
-    val model = Registry.memo(s"aesgd|$dir") {
-      graft.ml.AutoEncoderSGD.fit(wide, Seq("click", "view", "purchase"),
-        hidden = 8, epochs = 60)
-    }
-    publishOracle("ml_autoencoder_sgd",
-      rfaeOracleSqlFor("ml_autoencoder_sgd", model))
-    model.anomaly(wide)
+  private def q_ml_autoencoder_sgd(s: SparkSession, dir: String): DataFrame =
+    aeSgdModel(s, dir).anomaly(hourlyTags(s, dir))
       .select(col("bucket"), round(col("anomaly_score"), 6).as("anomaly_score"),
         col("anomalous"))
       .orderBy("bucket")
-  }
+
+  private def aeSgdModel(s: SparkSession, dir: String): graft.ml.AutoEncoder.RfaeModel =
+    Registry.memo(s"aesgd|$dir") {
+      graft.ml.AutoEncoderSGD.fit(hourlyTags(s, dir), Seq("click", "view", "purchase"),
+        hidden = 8, epochs = 60)
+    }
 
   /** SEQUENCE autoencoder (the KerasLSTMAutoEncoder slot) —
     * lag-embeds each hour's trailing lb=4 window into flat columns via
@@ -3349,25 +3274,20 @@ object SparkEntry {
     * via [[rfaeForwardSql]] (the chunk-carried embed is output-identical
     * to the oracle's global lag on any ≥lb−1-rows-per-chunk series).
     */
-  private def q_ml_autoencoder_seq(s: SparkSession, dir: String): DataFrame = {
-    val tags = Seq("click", "view", "purchase")
-    val wide = Timeseries.align(E(s, dir), "ts", "event_type", "value",
-      tags, "1 hour")
-      .na.drop("any", tags)
-    // epochs=40: the warm start IS the ELM optimum, so the descent only
-    // refines — and each epoch is one Spark job over the small embedded
-    // series, so epoch count ≈ cold seconds here
-    val model = Registry.memo(s"aeseq|$dir") {
-      graft.ml.SequenceAE.fit(wide, tags, lb = 4, orderCol = "bucket",
-        hidden = 12, epochs = 40)
-    }
-    publishOracle("ml_autoencoder_seq",
-      rfaeOracleSqlFor("ml_autoencoder_seq", model.inner))
-    model.anomaly(wide)
+  private def q_ml_autoencoder_seq(s: SparkSession, dir: String): DataFrame =
+    aeSeqModel(s, dir).anomaly(hourlyTags(s, dir))
       .select(col("bucket"), round(col("anomaly_score"), 6).as("anomaly_score"),
         col("anomalous"))
       .orderBy("bucket")
-  }
+
+  // epochs=40: the warm start IS the ELM optimum, so the descent only
+  // refines — and each epoch is one Spark job over the small embedded
+  // series, so epoch count ≈ cold seconds here
+  private def aeSeqModel(s: SparkSession, dir: String): graft.ml.SequenceAE.SeqAeModel =
+    Registry.memo(s"aeseq|$dir") {
+      graft.ml.SequenceAE.fit(hourlyTags(s, dir), Seq("click", "view", "purchase"),
+        lb = 4, orderCol = "bucket", hidden = 12, epochs = 40)
+    }
 
   /** TRUE BPTT recurrent sequence autoencoder (the faithful
     * KerasLSTMAutoEncoder slot, closing SURVEY §7.4 item 9) — a GRU
@@ -3382,31 +3302,28 @@ object SparkEntry {
     * forward pass per independent window in mapPartitions — the genuine-
     * recurrence escape hatch, embarrassingly parallel at any width.
     * ORACLE-CHECKED (round 11): the BPTT descent stays spec'd, but the
-    * fitted θ publishes as exact literals and [[gruOracleEntry]]
+    * fitted θ publishes as exact literals and [[gruOracleSqlFor]]
     * unrolls the whole recurrent serving pass — lb GRU encoder steps,
     * the zero-input decoder, reversed-window targets — as generated
     * chained CTEs in the Scala accumulation order.
     */
-  private def q_ml_rnn_autoencoder(s: SparkSession, dir: String): DataFrame = {
-    val tags = Seq("click", "view", "purchase")
-    val wide = Timeseries.align(E(s, dir), "ts", "event_type", "value",
-      tags, "1 hour")
-      .na.drop("any", tags)
-    // epochs=25: each epoch is one job over the small embedded series;
-    // the restore-best guard makes more epochs refinement, not risk.
-    // Persisted via the fingerprinted registry (the simsearch_ivf
-    // discipline) so a cold process pays a file read, not 25 jobs.
-    val model = Registry.memo(s"gruae|$dir") {
-      graft.ml.RnnAutoEncoder.fitOrLoad(Registry.path(s,
-          s"gruae-v1|$dir|lb=4|h=8|ep=25|seed=42", s"$dir/events.parquet") + ".txt",
-        wide, tags, lb = 4, orderCol = "bucket", hidden = 8, epochs = 25)
-    }
-    publishOracle("ml_rnn_autoencoder", gruOracleSqlFor(model))
-    model.score(wide)
+  private def q_ml_rnn_autoencoder(s: SparkSession, dir: String): DataFrame =
+    gruAeModel(s, dir).score(hourlyTags(s, dir))
       .select(col("bucket"), round(col("anomaly_score"), 6).as("anomaly_score"),
         col("anomalous"))
       .orderBy("bucket")
-  }
+
+  // epochs=25: each epoch is one job over the small embedded series;
+  // the restore-best guard makes more epochs refinement, not risk.
+  // Persisted via the fingerprinted registry (the simsearch_ivf
+  // discipline) so a cold process pays a file read, not 25 jobs.
+  private def gruAeModel(s: SparkSession, dir: String): graft.ml.RnnAutoEncoder.GruAeModel =
+    Registry.memo(s"gruae|$dir") {
+      graft.ml.RnnAutoEncoder.fitOrLoad(Registry.path(s,
+          s"gruae-v1|$dir|lb=4|h=8|ep=25|seed=42", s"$dir/events.parquet") + ".txt",
+        hourlyTags(s, dir), Seq("click", "view", "purchase"), lb = 4,
+        orderCol = "bucket", hidden = 8, epochs = 25)
+    }
 
   /** Per-key AR(6) one-step forecast over the resampled series (the
     * KerasLSTMForecast analogue) — per-tag univariate models on the
@@ -3422,17 +3339,17 @@ object SparkEntry {
     * dot's left-to-right order, and |y − ŷ|.
     */
   private def q_ml_ar_forecast(s: SparkSession, dir: String): DataFrame = {
-    val long = longResampled(s, dir)
-    val m = graft.ml.Forecast.fitPerKey(long, "event_type", "v", lb = 6, "bucket")
-    publishOracle("ml_ar_forecast", arOracleSqlFor(m.coefs.map { case (k, w, b) =>
-      (Seq(s"'$k'") ++ (w :+ b).map(x => s"CAST('$x' AS DOUBLE)")).mkString("(", ", ", ")")
-    }.mkString(", ")))
-    m.forecast(long, "bucket")
+    arModel(s, dir).forecast(longResampled(s, dir), "bucket")
       .select(col("bucket"), col("event_type"),
         round(col("v"), 6).as("v"), round(col("v_hat"), 6).as("v_hat"),
         round(col("v_anomaly"), 6).as("abs_err"))
       .orderBy("bucket", "event_type")
   }
+
+  private def arModel(s: SparkSession, dir: String): graft.ml.Forecast.KeyedForecastModel =
+    Registry.memo(s"ar6|$dir") {
+      graft.ml.Forecast.fitPerKey(longResampled(s, dir), "event_type", "v", lb = 6, "bucket")
+    }
 
   /** RECURRENT one-step-ahead forecast — the echo-state network
     * (KerasLSTMForecast's honest analogue: true cross-step state, only
@@ -3441,7 +3358,7 @@ object SparkEntry {
     * rows (event_type, n, mse_esn, mse_ar); the recurrence's value on a
     * task needing long memory is spec'd (~4× MSE on NARMA-10,
     * EchoStateSpec). ORACLE-CHECKED (round 11): both fitted models
-    * publish as exact literals and [[esnOracleEntry]] replays the
+    * render as exact literals and [[esnOracleSqlFor]] replays the
     * reservoir recurrence itself as a recursive CTE (32 state columns,
     * one iteration per series row) plus the AR(3) lag fold — the whole
     * serving surface, including the emit-before-update state contract
@@ -3453,17 +3370,7 @@ object SparkEntry {
     // materialize ONCE (round 14, the agg_basket_lift finding: each
     // reference replayed the events scan + resample aggregation)
     val long = longResampled(s, dir).na.drop("any", Seq("v")).localCheckpoint()
-    // fit-once, forecast-many (the simsearch_ivf discipline): both fits
-    // are seeded and deterministic, so the memoized model is identical to
-    // a refit — later executions pay only the forecast scans
-    val esn = Registry.memo(s"esn|$dir") {
-      graft.ml.EchoState.fit(long, Seq("v"), "bucket", Seq("event_type"),
-        reservoir = 32, washout = 10)
-    }
-    val ar = Registry.memo(s"ar3|$dir") {
-      graft.ml.Forecast.fitPerKey(long, "event_type", "v", lb = 3, "bucket")
-    }
-    publishOracle("esn_forecast", esnOracleSqlFor(esn, ar))
+    val (esn, ar) = esnModels(s, dir)
     // fair head-to-head: both MSEs over the IDENTICAL row set. The ESN
     // emits a prediction for every row (zero-state transient included)
     // while the AR drops the first lb rows per key — so rank the SHARED
@@ -3485,6 +3392,17 @@ object SparkEntry {
       .agg(round(avg("se"), 6).as("mse_ar"))
     esnErr.join(arErr, Seq("event_type")).orderBy("event_type")
   }
+
+  // fit-once, forecast-many (the simsearch_ivf discipline): both fits
+  // are seeded and deterministic, so the memoized models equal a refit
+  private def esnModels(s: SparkSession, dir: String)
+      : (graft.ml.EchoState.EsnModel, graft.ml.Forecast.KeyedForecastModel) =
+    Registry.memo(s"esn|$dir") {
+      val long = longResampled(s, dir).na.drop("any", Seq("v")).localCheckpoint()
+      (graft.ml.EchoState.fit(long, Seq("v"), "bucket", Seq("event_type"),
+          reservoir = 32, washout = 10),
+        graft.ml.Forecast.fitPerKey(long, "event_type", "v", lb = 3, "bucket"))
+    }
 
   /** Feature extraction over the opaque binary column — the multimodal
     * PLUMBING query (schema, decode-width pin, bounded batches). The
@@ -3621,12 +3539,9 @@ object SparkEntry {
     // the warm plan measures the OP — decode → aHash → banded hamming
     // join — not the synthetic fixture's double render+encode.
     assertTwinIdHeadroom(s, dir)
-    // Publish the decode output: the aHash table is the artifact the
-    // oracle replays from (the r11 fitted-params lifecycle — decode is
-    // the only leg plain SQL can't express).
-    val hashPath = phashHashesMaterialized(s, dir)
-    publishOracle("multimodal_phash_dedup", phashPairsOracle(hashPath))
-    Multimodal.phashPairsFromHashes(s.read.parquet(hashPath), 3)
+    // The decode output — the aHash table — is the artifact the oracle
+    // replays from (decode is the only leg plain SQL can't express).
+    Multimodal.phashPairsFromHashes(s.read.parquet(phashHashesMaterialized(s, dir)), 3)
       .orderBy("media_a", "media_b")
   }
 
@@ -3657,8 +3572,6 @@ object SparkEntry {
       Multimodal.phashPairsFromHashes(baseHashes, 3)
         .write.mode("overwrite").parquet(s"$out/pairs")
     }
-    publishOracle("multimodal_phash_incr",
-      phashPairsOracle(phashHashesMaterialized(s, dir)))
     val deltaHashes = Multimodal.averageHashes(
       s.read.parquet(mediaPath).filter(col("media_id") % 7 === 3),
       "media_id", "bytes")
@@ -4555,24 +4468,15 @@ object SparkEntry {
     * ~1e-3 at every SF, so the cut is stable; both fits stay spec'd.
     */
   private def q_ml_anomaly_ensemble(s: SparkSession, dir: String): DataFrame = {
-    val tags = Seq("click", "view", "purchase")
     // materialize the shared hourly-aligned frame ONCE (round 14): it
-    // feeds the PCA fit, the PCA scoring pass, and the forest scoring
-    // pass — three references that each re-ran the events scan +
-    // resample-align aggregation (no exchange reuse across the
-    // differently-pruned subtrees). One hourly frame is model-sized
-    // (buckets × 3 tags); values unchanged.
-    val wide = Timeseries.align(E(s, dir), "ts", "event_type", "value",
-      tags, "1 hour").na.drop("any", tags).localCheckpoint()
-    val pcaModel = graft.ml.PcaAnomaly.fit(wide, tags, k = 2)
-    val pca = pcaModel.score(wide)
+    // feeds the PCA and the forest scoring passes — references that each
+    // re-ran the events scan + resample-align aggregation (no exchange
+    // reuse across the differently-pruned subtrees). One hourly frame is
+    // model-sized (buckets × 3 tags); values unchanged.
+    val wide = hourlyTags(s, dir).localCheckpoint()
+    val pca = ensemblePcaModel(s, dir).score(wide)
       .select(col("bucket"), col("anomaly_score").as("s_pca"))
-    val forestModel = Registry.memo(s"iforest/$dir") {
-      graft.ml.IsolationForest.fit(wide, tags, "bucket")
-    }
-    publishOracle("ml_anomaly_ensemble",
-      ensembleOracleSqlFor(isoForestBits(forestModel), pcaBits(pcaModel)))
-    val forest = forestModel.score(wide, "bucket")
+    val forest = iforestModel(s, dir).score(wide, "bucket")
       .select(col("bucket"), col("anomaly_score").as("s_if"))
     val maha = mahalanobisD2(s, dir).select(col("bucket"), col("d2").as("s_mh"))
     val j = pca.join(forest, "bucket").join(maha, "bucket")
@@ -4591,6 +4495,11 @@ object SparkEntry {
       .orderBy(col("consensus").desc, col("bucket")).limit(20)
       .withColumn("consensus", round(col("consensus"), 6))
   }
+
+  private def ensemblePcaModel(s: SparkSession, dir: String): graft.ml.PcaAnomalyModel =
+    Registry.memo(s"pcaens|$dir") {
+      graft.ml.PcaAnomaly.fit(hourlyTags(s, dir), Seq("click", "view", "purchase"), k = 2)
+    }
 
   /** The (bucket, x, y, d2) Mahalanobis frame shared by the oracle-
     * checked query and the ensemble. */
@@ -7987,18 +7896,11 @@ object SparkEntry {
 
   /** The shared `v/b/bl` CTE prefix reproducing HyperplaneBuckets' exact
     * per-table bucket longs in SQL (plane literals inlined) — used by the
-    * lsh-pairs and knn-graph oracles.
-    */
-  private def lshBucketCtes(nTables: Int, nPlanes: Int, dim: Int): String =
-    lshBucketCtes(Seq.fill(nTables)(nPlanes), dim)
-
-  /** Schedule-parameterized form (round 14, the r13 verdict's #6):
-    * table t sums exactly `schedule(t)` sign bits — the SQL twin of
+    * lsh-pairs and knn-graph oracles. Table t sums exactly `schedule(t)`
+    * sign bits — the SQL twin of
     * [[graft.ops.Similarity.autoPlanesSchedule]]'s masked expression
     * (bit b of table t comes from plane (t, b), so summing the first
-    * p_t bits IS the masked bucket). A uniform all-8s schedule emits
-    * byte-identical text to the historical static oracles, so every
-    * below-floor fixture's oracle SQL — and hash — is untouched.
+    * p_t bits IS the masked bucket).
     */
   private def lshBucketCtes(schedule: Seq[Int], dim: Int): String = {
     def planeLit(t: Int, p: Int): String =
@@ -8016,15 +7918,11 @@ object SparkEntry {
        |bl AS ($blUnion)""".stripMargin
   }
 
-  /** Uniform 8×8 schedule — the historical static-oracle setting and
-    * the [[graft.ops.Similarity.autoPlanesSchedule]] floor value; every
-    * LSH-family oracle builder defaults to it so the below-floor text
-    * stays byte-identical to the pre-schedule static SQL.
+  /** LSH candidate pairs (vec_a < vec_b) with their exact dot and squared
+    * norms, ending in `sc(vec_a, vec_b, dot, naa, nbb)`.
     */
-  private val u8: Seq[Int] = Seq.fill(8)(8)
-
-  private def lshOracleSql(schedule: Seq[Int] = u8): String = {
-    s"""WITH ${lshBucketCtes(schedule, 64)},
+  private def lshPairCtes(schedule: Seq[Int]): String =
+    s"""${lshBucketCtes(schedule, 64)},
        |cand AS (SELECT DISTINCT a.vec_id AS vec_a, b2.vec_id AS vec_b
        |         FROM bl a JOIN bl b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket
        |          AND a.vec_id < b2.vec_id),
@@ -8036,29 +7934,19 @@ object SparkEntry {
        |       JOIN embeddings ea ON ea.vec_id = c.vec_a
        |       JOIN embeddings eb ON eb.vec_id = c.vec_b
        |       JOIN n na ON na.vec_id = c.vec_a
-       |       JOIN n nb ON nb.vec_id = c.vec_b)
+       |       JOIN n nb ON nb.vec_id = c.vec_b)""".stripMargin
+
+  private def lshOracleSql(schedule: Seq[Int]): String =
+    s"""WITH ${lshPairCtes(schedule)}
        |SELECT vec_a, vec_b, round(dot / sqrt(naa * nbb), 6) AS cos_sim
        |FROM sc WHERE dot / sqrt(naa * nbb) >= 0.3
        |ORDER BY vec_a, vec_b""".stripMargin
-  }
 
   /** Recall-audit oracle: the lsh CTEs + an exact all-pairs count at
     * the same threshold; same subset argument, same count ratio.
     */
-  private def recallAuditOracle(schedule: Seq[Int] = u8): String = {
-    s"""WITH ${lshBucketCtes(schedule, 64)},
-       |cand AS (SELECT DISTINCT a.vec_id AS vec_a, b2.vec_id AS vec_b
-       |         FROM bl a JOIN bl b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket
-       |          AND a.vec_id < b2.vec_id),
-       |n AS (SELECT vec_id, ${normSqSql("embedding")} AS nsq FROM embeddings),
-       |sc AS (SELECT c.vec_a, c.vec_b,
-       |         ${dotSql("ea.embedding", "eb.embedding")} AS dot,
-       |         na.nsq AS naa, nb.nsq AS nbb
-       |       FROM cand c
-       |       JOIN embeddings ea ON ea.vec_id = c.vec_a
-       |       JOIN embeddings eb ON eb.vec_id = c.vec_b
-       |       JOIN n na ON na.vec_id = c.vec_a
-       |       JOIN n nb ON nb.vec_id = c.vec_b),
+  private def recallAuditOracle(schedule: Seq[Int]): String =
+    s"""WITH ${lshPairCtes(schedule)},
        |lp AS (SELECT count(*) AS n_lsh FROM sc
        |       WHERE dot / sqrt(NULLIF(naa * nbb, 0)) >= 0.4),
        |ex AS (SELECT count(*) AS n_exact
@@ -8071,18 +7959,16 @@ object SparkEntry {
        |  round(CAST(n_lsh AS DOUBLE) / NULLIF(CAST(n_exact AS DOUBLE), 0), 6)
        |    AS recall
        |FROM ex CROSS JOIN lp""".stripMargin
-  }
 
-  /** k-NN graph oracle: identical plane literals → identical buckets →
+  /** kNN-graph edge CTE chain (ends in `rk0`, the ranked candidates,
+    * and `e(src, dst, dist)`, the top-3 edges) — the exact
+    * simsearch_knn_graph edge set, shared by the knn-graph and every
+    * graph-family oracle. Identical plane literals → identical buckets →
     * identical candidate sets; the per-source rank then agrees because
     * the cosine arithmetic is the same IEEE sequence on both sides and
     * ties break by neighbor id.
     */
-  /** kNN-graph edge CTE chain (ends in `e(src, dst)`) — the exact
-    * simsearch_knn_graph edge set, shared by the graph_cc /
-    * graph_degree oracles (pagerank/triangles inline the same text).
-    */
-  private def knnEdgeCtes(schedule: Seq[Int] = u8): String =
+  private def knnEdgeCtes(schedule: Seq[Int]): String =
     s"""${lshBucketCtes(schedule, 64)},
        |cand AS (SELECT DISTINCT a.vec_id AS qid, b2.vec_id AS nid
        |         FROM bl a JOIN bl b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket
@@ -8104,35 +7990,15 @@ object SparkEntry {
        |        1.0 - round(dot / sqrt(naa * nbb), 6) AS dist
        |      FROM rk0 WHERE rnk <= 3)""".stripMargin
 
-  private def knnGraphOracleSql(schedule: Seq[Int] = u8): String = {
-    s"""WITH ${lshBucketCtes(schedule, 64)},
-       |cand AS (SELECT DISTINCT a.vec_id AS qid, b2.vec_id AS nid
-       |         FROM bl a JOIN bl b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket
-       |          AND a.vec_id <> b2.vec_id),
-       |n AS (SELECT vec_id, ${normSqSql("embedding")} AS nsq FROM embeddings),
-       |sc AS (SELECT c.qid, c.nid,
-       |         ${dotSql("ea.embedding", "eb.embedding")} AS dot,
-       |         na.nsq AS naa, nb.nsq AS nbb
-       |       FROM cand c
-       |       JOIN embeddings ea ON ea.vec_id = c.qid
-       |       JOIN embeddings eb ON eb.vec_id = c.nid
-       |       JOIN n na ON na.vec_id = c.qid
-       |       JOIN n nb ON nb.vec_id = c.nid),
-       |r AS (SELECT qid, nid, dot / sqrt(naa * nbb) AS cr,
-       |        row_number() OVER (PARTITION BY qid
-       |          ORDER BY dot / sqrt(naa * nbb) DESC, nid) AS rnk
-       |      FROM sc)
-       |SELECT qid, nid, round(cr, 6) AS cos_sim, rnk
-       |FROM r WHERE rnk <= 3 ORDER BY qid, rnk""".stripMargin
-  }
+  private def knnGraphOracleSql(schedule: Seq[Int]): String =
+    s"""WITH ${knnEdgeCtes(schedule)}
+       |SELECT qid, nid, round(dot / sqrt(naa * nbb), 6) AS cos_sim, rnk
+       |FROM rk0 WHERE rnk <= 3 ORDER BY qid, rnk""".stripMargin
 
-  /** Graph-family oracles over the kNN edge CTEs — factored into
-    * schedule-parameterized builders (round 14, r13 verdict #6) so each
-    * query can PUBLISH the fixture's scheduled-bits version at run time;
-    * the static map entries call the uniform default (byte-identical to
-    * the historical text).
+  /** Graph-family oracles over the kNN edge CTEs, each rendered at the
+    * fixture's bucket-bit schedule ([[generatedOracleSql]]).
     */
-  private def graphCcOracle(schedule: Seq[Int] = u8): String =
+  private def graphCcOracle(schedule: Seq[Int]): String =
     s"""WITH RECURSIVE ${knnEdgeCtes(schedule)},
        |und AS (SELECT src, dst FROM e UNION SELECT dst, src FROM e),
        |nod AS (SELECT vec_id AS id FROM embeddings),
@@ -8146,7 +8012,7 @@ object SparkEntry {
        |SELECT c.vec_id, c.comp, s.n_members
        |FROM comp c JOIN sz s USING (comp) ORDER BY vec_id""".stripMargin
 
-  private def graphBfsOracle(schedule: Seq[Int] = u8): String =
+  private def graphBfsOracle(schedule: Seq[Int]): String =
     s"""WITH RECURSIVE ${knnEdgeCtes(schedule)},
        |und AS (SELECT src, dst FROM e UNION SELECT dst, src FROM e),
        |seeds AS (SELECT vec_id FROM embeddings WHERE label = 0),
@@ -8160,7 +8026,7 @@ object SparkEntry {
        |FROM embeddings em LEFT JOIN best b USING (vec_id)
        |ORDER BY vec_id""".stripMargin
 
-  private def graphJaccardNbrsOracle(schedule: Seq[Int] = u8): String =
+  private def graphJaccardNbrsOracle(schedule: Seq[Int]): String =
     s"""WITH ${knnEdgeCtes(schedule)},
        |und AS (SELECT src, dst FROM e UNION SELECT dst, src FROM e),
        |deg AS (SELECT src, count(*) AS deg FROM und GROUP BY 1),
@@ -8177,7 +8043,7 @@ object SparkEntry {
        |SELECT a, b, inter, jaccard, is_edge FROM j WHERE jaccard >= 0.4
        |ORDER BY a, b""".stripMargin
 
-  private def graphDegreeOracle(schedule: Seq[Int] = u8): String =
+  private def graphDegreeOracle(schedule: Seq[Int]): String =
     s"""WITH ${knnEdgeCtes(schedule)},
        |outd AS (SELECT src AS vec_id, count(*) AS out_deg FROM e GROUP BY 1),
        |ind AS (SELECT dst AS vec_id, count(*) AS in_deg FROM e GROUP BY 1),
@@ -8191,7 +8057,7 @@ object SparkEntry {
        |LEFT JOIN ind USING (vec_id) LEFT JOIN undd USING (vec_id)
        |ORDER BY vec_id""".stripMargin
 
-  private def lofOracle(schedule: Seq[Int] = u8): String =
+  private def lofOracle(schedule: Seq[Int]): String =
     s"""WITH ${knnEdgeCtes(schedule)},
        |kd AS (SELECT src, max(dist) AS kdist FROM e GROUP BY 1),
        |reach AS (SELECT e.src AS p,
@@ -8209,11 +8075,11 @@ object SparkEntry {
        |    AS lof
        |FROM lrd l JOIN sl USING (p) ORDER BY vec_id""".stripMargin
 
-  /** PageRank oracle: the knn-graph CTEs verbatim (same edges), then ten
+  /** PageRank oracle: the knn edge CTEs (same edges), then ten
     * UNROLLED power-iteration CTEs (a recursive CTE cannot aggregate in
     * its recursive member) replaying the identical integer arithmetic.
     */
-  private def pagerankOracle(schedule: Seq[Int] = u8): String = {
+  private def pagerankOracle(schedule: Seq[Int]): String = {
     val iters = (1 to 10).map { k =>
       s"""p$k AS (SELECT nn.vec_id,
          |    150000 + (850 * COALESCE(f.inflow, 0)) // 1000 AS pr
@@ -8223,24 +8089,7 @@ object SparkEntry {
          |    FROM ed JOIN p${k - 1} ON p${k - 1}.vec_id = ed.src
          |    GROUP BY 1) f USING (vec_id))"""
     }.mkString(",\n|")
-    s"""WITH ${lshBucketCtes(schedule, 64)},
-       |cand AS (SELECT DISTINCT a.vec_id AS qid, b2.vec_id AS nid
-       |         FROM bl a JOIN bl b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket
-       |          AND a.vec_id <> b2.vec_id),
-       |n0 AS (SELECT vec_id, ${normSqSql("embedding")} AS nsq FROM embeddings),
-       |sc AS (SELECT c.qid, c.nid,
-       |         ${dotSql("ea.embedding", "eb.embedding")} AS dot,
-       |         na.nsq AS naa, nb.nsq AS nbb
-       |       FROM cand c
-       |       JOIN embeddings ea ON ea.vec_id = c.qid
-       |       JOIN embeddings eb ON eb.vec_id = c.nid
-       |       JOIN n0 na ON na.vec_id = c.qid
-       |       JOIN n0 nb ON nb.vec_id = c.nid),
-       |r AS (SELECT qid, nid,
-       |        row_number() OVER (PARTITION BY qid
-       |          ORDER BY dot / sqrt(naa * nbb) DESC, nid) AS rnk
-       |      FROM sc),
-       |e AS (SELECT qid AS src, nid AS dst FROM r WHERE rnk <= 3),
+    s"""WITH ${knnEdgeCtes(schedule)},
        |d AS (SELECT src, count(*) AS deg FROM e GROUP BY 1),
        |ed AS (SELECT e.src, e.dst, d.deg FROM e JOIN d USING (src)),
        |p0 AS (SELECT vec_id, CAST(1000000 AS BIGINT) AS pr FROM embeddings),
@@ -8249,28 +8098,11 @@ object SparkEntry {
        |ORDER BY vec_id""".stripMargin
   }
 
-  /** Triangle/clustering oracle: the knn CTEs verbatim, symmetrized
+  /** Triangle/clustering oracle: the knn edge CTEs, symmetrized
     * ordered edges, the identical a<b<c enumeration and corner credits.
     */
-  private def trianglesOracle(schedule: Seq[Int] = u8): String =
-    s"""WITH ${lshBucketCtes(schedule, 64)},
-       |cand AS (SELECT DISTINCT a.vec_id AS qid, b2.vec_id AS nid
-       |         FROM bl a JOIN bl b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket
-       |          AND a.vec_id <> b2.vec_id),
-       |n0 AS (SELECT vec_id, ${normSqSql("embedding")} AS nsq FROM embeddings),
-       |sc AS (SELECT c.qid, c.nid,
-       |         ${dotSql("ea.embedding", "eb.embedding")} AS dot,
-       |         na.nsq AS naa, nb.nsq AS nbb
-       |       FROM cand c
-       |       JOIN embeddings ea ON ea.vec_id = c.qid
-       |       JOIN embeddings eb ON eb.vec_id = c.nid
-       |       JOIN n0 na ON na.vec_id = c.qid
-       |       JOIN n0 nb ON nb.vec_id = c.nid),
-       |r AS (SELECT qid, nid,
-       |        row_number() OVER (PARTITION BY qid
-       |          ORDER BY dot / sqrt(naa * nbb) DESC, nid) AS rnk
-       |      FROM sc),
-       |e AS (SELECT qid AS src, nid AS dst FROM r WHERE rnk <= 3),
+  private def trianglesOracle(schedule: Seq[Int]): String =
+    s"""WITH ${knnEdgeCtes(schedule)},
        |und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
        |        FROM e),
        |deg AS (SELECT v, count(*) AS deg FROM (
@@ -8687,7 +8519,6 @@ object SparkEntry {
         |  FROM w WHERE len(ws) >= 2)
         |SELECT doc_id, count(*) AS n_hits, CAST(min(pos) AS BIGINT) AS first_pos
         |FROM m GROUP BY 1 ORDER BY doc_id""".stripMargin,
-    "ml_lof" -> lofOracle(),
     "stream_geo_fence" -> {
       val (ula, ulo) = geoE4Sql("u", "user_id")
       val cy = triE4Sql("tc", "s_suppkey", 1, 1000000L)
@@ -9994,10 +9825,6 @@ object SparkEntry {
          | FROM embeddings a, embeddings b WHERE a.vec_id < b.vec_id)
          |SELECT va AS vec_a, vb AS vec_b, dot/sqrt(naa*nbb) AS cos_sim
          |FROM dots WHERE dot/sqrt(naa*nbb) >= 0.4 ORDER BY vec_a, vec_b""".stripMargin,
-    "simsearch_lsh" -> lshOracleSql(),
-    "simsearch_knn_graph" -> knnGraphOracleSql(),
-    // the incremental merge must EQUAL the full rebuild — same oracle
-    "simsearch_knn_incr" -> knnGraphOracleSql(),
     "simsearch_topk" -> topkOracleSql,
     // nProbe = nLists makes IVF exhaustive ≡ brute force: same oracle
     "simsearch_ivf_exact" -> topkOracleSql,
@@ -10980,14 +10807,7 @@ object SparkEntry {
     "agg_corr_matrix" -> corrMatrixOracle,
     "agg_mahalanobis" -> mahalanobisOracle,
     "agg_acf" -> acfOracle,
-    "graph_pagerank" -> pagerankOracle(),
-    "graph_triangles" -> trianglesOracle(),
-    "graph_cc" -> graphCcOracle(),
-    "graph_bfs" -> graphBfsOracle(),
-    "graph_jaccard_nbrs" -> graphJaccardNbrsOracle(),
-    "graph_degree" -> graphDegreeOracle(),
     "simsearch_mmr" -> mmrOracle,
-    "simsearch_recall_audit" -> recallAuditOracle(),
     "win_drawdown" ->
       """WITH h AS (
         |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
@@ -11692,23 +11512,50 @@ object SparkEntry {
         |               pt AS (PARTITION BY event_type))
         |SELECT event_type, round(max(abs(fa - fb)), 6) AS ks
         |FROM cum GROUP BY 1 ORDER BY 1""".stripMargin
-  ) ++ publishedOracles(
-    // the run-time-published entries (fitted-params / persisted-artifact
-    // oracles): each query builds its own SQL at execution time via
-    // publishOracle — no shared mutable state, no run-order coupling
-    // (a cold process falls back to the registry-persisted fragment)
-    "simsearch_ivf", "simsearch_pq", "ml_ar_forecast", "ml_adaboost",
-    "ml_isolation_forest", "ml_anomaly_ensemble", "ml_autoencoder",
-    "ml_autoencoder_sgd", "ml_autoencoder_seq", "ml_rnn_autoencoder",
-    "esn_forecast", "multimodal_phash_dedup", "multimodal_phash_incr",
-    // The LSH family (round 14): each query publishes its oracle with
-    // plane literals generated from the fixture's autoPlanesSchedule —
-    // published text OVERRIDES the static uniform-8s default (map ++
-    // semantics), which remains the byte-identical below-floor
-    // fallback for a cold process.
-    "simsearch_lsh", "simsearch_recall_audit", "simsearch_knn_graph",
-    "simsearch_knn_incr", "graph_pagerank", "graph_triangles", "graph_cc",
-    "graph_bfs", "graph_jaccard_nbrs", "graph_degree", "ml_lof")
+  )
+
+  /** Oracles rendered from the fitted or persisted state their query
+    * serves — the same memoized fits ([[embSchedule]], [[ivfModel]], …)
+    * and registry artifacts its builder reads — so each is a function of
+    * the fixture alone: the rendering never depends on whether, or in
+    * which process, the query ran. On a cold registry rendering fits.
+    */
+  val generatedOracleSql: Map[String, (SparkSession, String) => String] = {
+    def from[M](fit: (SparkSession, String) => M)(render: M => String) =
+      (s: SparkSession, dir: String) => render(fit(s, dir))
+    Map(
+      "simsearch_lsh" -> from(embSchedule)(lshOracleSql),
+      "simsearch_recall_audit" -> from(embSchedule)(recallAuditOracle),
+      "simsearch_knn_graph" -> from(embSchedule)(knnGraphOracleSql),
+      // the incremental merge must EQUAL the full rebuild — same oracle
+      "simsearch_knn_incr" -> from(embSchedule)(knnGraphOracleSql),
+      "graph_pagerank" -> from(embSchedule)(pagerankOracle),
+      "graph_triangles" -> from(embSchedule)(trianglesOracle),
+      "graph_cc" -> from(embSchedule)(graphCcOracle),
+      "graph_bfs" -> from(embSchedule)(graphBfsOracle),
+      "graph_jaccard_nbrs" -> from(embSchedule)(graphJaccardNbrsOracle),
+      "graph_degree" -> from(embSchedule)(graphDegreeOracle),
+      "ml_lof" -> from(embSchedule)(lofOracle),
+      "simsearch_ivf" -> from(ivfModel)(ivfOracleSqlFor),
+      "simsearch_pq" -> from(pqModel)(pqOracleSqlFor),
+      "ml_adaboost" -> from(adaboostModel)(adaboostOracleSqlFor),
+      "ml_isolation_forest" ->
+        from(iforestModel)(m => isoForestOracleSqlFor(isoForestBits(m))),
+      "ml_anomaly_ensemble" ->
+        from((s, dir) => (iforestModel(s, dir), ensemblePcaModel(s, dir))) {
+          case (forest, pca) => ensembleOracleSqlFor(isoForestBits(forest), pcaBits(pca))
+        },
+      "ml_autoencoder" -> from(rfaeModel)(rfaeOracleSqlFor("ml_autoencoder", _)),
+      "ml_autoencoder_sgd" -> from(aeSgdModel)(rfaeOracleSqlFor("ml_autoencoder_sgd", _)),
+      "ml_autoencoder_seq" ->
+        from(aeSeqModel)(m => rfaeOracleSqlFor("ml_autoencoder_seq", m.inner)),
+      "ml_rnn_autoencoder" -> from(gruAeModel)(gruOracleSqlFor),
+      "ml_ar_forecast" -> from(arModel)(arOracleSqlFor),
+      "esn_forecast" -> from(esnModels) { case (esn, ar) => esnOracleSqlFor(esn, ar) },
+      // the incremental merge must EQUAL the full rebuild — same oracle
+      "multimodal_phash_dedup" -> from(phashHashesMaterialized)(phashPairsOracle),
+      "multimodal_phash_incr" -> from(phashHashesMaterialized)(phashPairsOracle))
+  }
 
   /** DuckDB DOUBLE[] literal that parses EXACTLY: a plain decimal
     * literal goes through DECIMAL(18,17) and the cast to DOUBLE can
@@ -11779,7 +11626,7 @@ object SparkEntry {
   }
 
   /** One RFAE oracle (the three autoencoder-serving queries, round 11;
-    * published at fit time via [[publishOracle]]): base random-feature
+    * rendered from the memoized fits): base random-feature
     * AE and the SGD-trained AE score the aligned columns directly; the
     * sequence AE first delay-embeds lb=4 windows — the oracle's plain
     * `lag() OVER (ORDER BY bucket)` is output-identical to the Spark
@@ -12135,7 +11982,12 @@ object SparkEntry {
     * sign predictions (margin ≥ 0 → en), and the per-lang confusion
     * counts — integer-exact end to end.
     */
-  private def adaboostOracleSqlFor(margin: String): String =
+  private def adaboostOracleSqlFor(m: graft.ml.AdaBoostModel): String = {
+    // the margin is a left-assoc sum of CASE terms in stump order
+    val margin = m.stumps.map { st =>
+      s"(CASE WHEN ${m.features(st.feature)} > ${dlit(st.threshold)} " +
+        s"THEN ${dlit(st.polarity)} ELSE ${dlit(-st.polarity)} END) * ${dlit(st.alpha)}"
+    }.mkString(" + ")
     s"""WITH f AS (SELECT lang,
          |    CAST(n_chars AS DOUBLE) AS f_chars,
          |    CAST(len(ws) AS DOUBLE) AS f_words,
@@ -12157,6 +12009,7 @@ object SparkEntry {
          |  CAST(sum(CASE WHEN pred = y THEN 1 ELSE 0 END) AS BIGINT)
          |    AS correct
          |FROM p GROUP BY 1 ORDER BY 1""".stripMargin
+  }
 
   /** ml_ar_forecast oracle (round 11): the fitted coefficients as exact
     * literal inputs; the serving path — rounded 10-minute resample,
@@ -12166,7 +12019,10 @@ object SparkEntry {
     * re-derived independently. x₀ is the OLDEST lag (collect_list over
     * rowsBetween(-6,-1) is bucket-ascending).
     */
-  private def arOracleSqlFor(vals: String): String =
+  private def arOracleSqlFor(m: graft.ml.Forecast.KeyedForecastModel): String = {
+    val vals = m.coefs.map { case (k, w, b) =>
+      (s"'$k'" +: (w :+ b).map(dlit)).mkString("(", ", ", ")")
+    }.mkString(", ")
     s"""WITH r AS (SELECT
          |    time_bucket(INTERVAL '10 minutes', CAST(ts AS TIMESTAMP)) AS bucket,
          |    event_type, round(avg(value), 6) AS v
@@ -12187,6 +12043,7 @@ object SparkEntry {
          |SELECT bucket, event_type, round(v, 6) AS v,
          |  round(v_hat, 6) AS v_hat, round(abs(v - v_hat), 6) AS abs_err
          |FROM p ORDER BY bucket, event_type""".stripMargin
+  }
 
   /** simsearch_pq oracle (round 11): with the persisted codebooks as
     * literal inputs, DuckDB re-encodes every corpus vector (argmin of
@@ -12194,7 +12051,10 @@ object SparkEntry {
     * decoded approximation by ordered lookup, and re-ranks the cosine
     * top-k — the full PQ serving path, independent of the Spark plan.
     */
-  private def pqOracleSqlFor(subDim: Int, vals: String): String =
+  private def pqOracleSqlFor(m: Similarity.PqModel): String = {
+    val subDim = m.subDim
+    val vals = (for (j <- 0 until m.m; (c, i) <- m.codebooks(j).zipWithIndex)
+      yield s"($j, $i, ${doubleArraySql(c)})").mkString(", ")
     s"""WITH cb AS (SELECT * FROM (VALUES $vals) AS t(sub, code, cvec)),
            |dd AS (SELECT e.vec_id, cb.sub, cb.code, cb.cvec,
            |    ${normSqSql("cb.cvec")} - 2.0 * list_sum(list_transform(
@@ -12221,6 +12081,7 @@ object SparkEntry {
            |  FROM dots)
            |SELECT qid, nid, cos_sim, CAST(rnk AS BIGINT) AS rnk
            |FROM ranked WHERE rnk <= 5 ORDER BY qid, rnk""".stripMargin
+  }
 
   /** simsearch_ivf oracle (round 11): with the persisted centroids as
     * literal inputs, the whole IVF serving path — squared-L2 assignment
@@ -12230,7 +12091,9 @@ object SparkEntry {
     * both engines evaluate the same double arithmetic left to right, so
     * order statistics agree; cos_sim rounds to 6 on both sides.
     */
-  private def ivfOracleSqlFor(vals: String): String =
+  private def ivfOracleSqlFor(m: Similarity.IvfModel): String = {
+    val vals = m.centroids.map { case (id, v) => s"($id, ${doubleArraySql(v)})" }
+      .mkString(", ")
     s"""WITH cent AS (SELECT * FROM (VALUES $vals) AS t(cluster, cvec)),
          |ad AS (SELECT e.vec_id, e.embedding, c.cluster,
          |    ${normSqSql("c.cvec")} - 2.0 * ${dotSql("e.embedding", "c.cvec")} AS d
@@ -12260,6 +12123,7 @@ object SparkEntry {
          |SELECT qid, nid, round(cos_raw, 6) AS cos_sim,
          |  CAST(rnk AS BIGINT) AS rnk
          |FROM ranked WHERE rnk <= 5 ORDER BY qid, rnk""".stripMargin
+  }
 
   /** Shared BM25 CTE chain ending in `b(doc_id, bm25)` — the full
     * inverted-index algebra mirrored from [[graft.ops.Search.bm25]]

@@ -5,14 +5,10 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // Fixture-key the generated-oracle fragments (see
-    // SparkEntry.oracleFragmentFile): a query that fails here must
-    // surface as a MISSING oracle, never as a stale one from a
-    // different fixture's earlier run.
-    System.setProperty("graft.oracle.fixture", sfDir)
     // optional trailing names: dump only those queries (and only their
     // oracle entries) — local iteration aid; the driver passes none.
     val only = args.drop(2).toSet
+    def wanted(name: String): Boolean = only.isEmpty || only(name)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // canonical graft session (AQE, UTC, extensions, nanosAsLong) — the
     // correctness gate runs the same config a deployment would.
@@ -24,14 +20,14 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    def failed(what: String, e: Throwable): Unit =
+      System.err.println(s"[verify] $what failed: ${e.getClass.getName}: ${e.getMessage}")
     SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
+      .filter { case (name, _) => wanted(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+      catch { case e: Throwable => failed(name, e) }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -45,8 +41,15 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only(k) }
+    // generated oracles render after the queries ran, each on its own:
+    // one that throws is left out of oracle_sql.json, its cause printed
+    val generated = SparkEntry.generatedOracleSql
+      .filter { case (k, _) => wanted(k) }
+      .flatMap { case (k, render) =>
+        try Some(k -> render(spark, sfDir))
+        catch { case e: Throwable => failed(s"$k oracle", e); None }
+      }
+    val json = (SparkEntry.oracleSql.filter { case (k, _) => wanted(k) } ++ generated)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -302,22 +302,22 @@ object MediaCodec {
     * webp codec; dimensions are what the metadata path needs).
     */
   private[multimodal] def webpDims(bytes: Array[Byte]): Option[(Int, Int)] = {
-    def u8(i: Int) = bytes(i) & 0xff
+    def ub(i: Int) = bytes(i) & 0xff
     if (bytes.length < 30) return None
     fourcc(bytes, 12) match {
       case "VP8 " => // lossy: 3-byte frame tag, 3-byte sync, then 14-bit dims
-        if (u8(23) != 0x9d || u8(24) != 0x01 || u8(25) != 0x2a) None
-        else Some(((u8(26) | (u8(27) << 8)) & 0x3fff,
-          (u8(28) | (u8(29) << 8)) & 0x3fff))
+        if (ub(23) != 0x9d || ub(24) != 0x01 || ub(25) != 0x2a) None
+        else Some(((ub(26) | (ub(27) << 8)) & 0x3fff,
+          (ub(28) | (ub(29) << 8)) & 0x3fff))
       case "VP8L" => // lossless: 0x2F signature, then 14+14 bits of dims-1
-        if (u8(20) != 0x2f) None
+        if (ub(20) != 0x2f) None
         else {
-          val b = u8(21) | (u8(22) << 8) | (u8(23) << 16) | (u8(24).toLong << 24)
+          val b = ub(21) | (ub(22) << 8) | (ub(23) << 16) | (ub(24).toLong << 24)
           Some((((b & 0x3fff) + 1).toInt, (((b >> 14) & 0x3fff) + 1).toInt))
         }
       case "VP8X" => // extended: 4 flag bytes, then 24+24-bit canvas dims-1
-        Some(((u8(24) | (u8(25) << 8) | (u8(26) << 16)) + 1,
-          (u8(27) | (u8(28) << 8) | (u8(29) << 16)) + 1))
+        Some(((ub(24) | (ub(25) << 8) | (ub(26) << 16)) + 1,
+          (ub(27) | (ub(28) << 8) | (ub(29) << 16)) + 1))
       case _ => None
     }
   }

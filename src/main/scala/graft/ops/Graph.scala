@@ -17,7 +17,8 @@ object Graph {
     * (dampNum·inflow) div 1000. Dangling/isolated nodes keep only the
     * base each round (mass leak — the textbook simplification,
     * deterministic). Edge table is checkpointed once; lineage truncates
-    * every other round.
+    * every fourth round. No session conf is touched: the plan runs
+    * under whatever AQE setting the caller's session has.
     */
   def pagerank(edges: DataFrame, nodes: DataFrame, rounds: Int = 10,
       dampNum: Long = 850L, base: Long = 150000L): DataFrame = {
@@ -41,36 +42,20 @@ object Graph {
       nodes.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(thr)
     val hint: DataFrame => DataFrame =
       if (ranksFit) (df: DataFrame) => broadcast(df) else identity
-    // With the joins pinned by hints, AQE has nothing left to discover
-    // at runtime for this loop — it only multiplies job submissions (one
-    // per query stage per checkpoint; r14 measured 48/run, and its
-    // AQE-off attempt lost the broadcasts because it had no hints, 3.4×
-    // wall). Static planning UNDER THE HINTS keeps the broadcast joins
-    // and submits one job per materialization. Scoped to the hinted
-    // (rank-frames-fit) case and restored after the loop; past the
-    // estimate threshold both toggles stay off and the plan is the r14
-    // scale shape.
-    val sconf = edges.sparkSession.conf
-    val aqeBefore = sconf.get("spark.sql.adaptive.enabled", "true")
-    if (ranksFit) sconf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      var pr = n.withColumn("pr", lit(1000000L))
-      for (k <- 1 to rounds) {
-        val inflow = e.join(hint(pr), e("src") === pr("id"))
-          .select(col("dst"), expr("pr div deg").as("contrib"))
-          .groupBy("dst").agg(sum(col("contrib")).as("inflow"))
-        pr = n.join(hint(inflow), n("id") === inflow("dst"), "left_outer")
-          .select(n("id"),
-            (lit(base) + expr(s"($dampNum * coalesce(inflow, 0L)) div 1000"))
-              .as("pr"))
-        // cadence 4 under static planning (round 15; was 2): half the
-        // materializations, and the hinted 4-round static plan is all
-        // broadcast joins — lineage depth is cheap where AQE's per-stage
-        // scheduling was not
-        if (k % 4 == 0 || k == rounds) pr = pr.localCheckpoint()
-      }
-      pr
-    } finally if (ranksFit) sconf.set("spark.sql.adaptive.enabled", aqeBefore)
+    var pr = n.withColumn("pr", lit(1000000L))
+    for (k <- 1 to rounds) {
+      val inflow = e.join(hint(pr), e("src") === pr("id"))
+        .select(col("dst"), expr("pr div deg").as("contrib"))
+        .groupBy("dst").agg(sum(col("contrib")).as("inflow"))
+      pr = n.join(hint(inflow), n("id") === inflow("dst"), "left_outer")
+        .select(n("id"),
+          (lit(base) + expr(s"($dampNum * coalesce(inflow, 0L)) div 1000"))
+            .as("pr"))
+      // lineage truncated every 4th round: the hinted plan is all
+      // broadcast joins, so lineage depth is cheap
+      if (k % 4 == 0 || k == rounds) pr = pr.localCheckpoint()
+    }
+    pr
   }
 
   /** Triangle counts + local clustering coefficient over an UNDIRECTED

@@ -1,13 +1,32 @@
 package graft
 
-/** Driver-contract consistency: every oracle has a query, and every query
-  * is callable at smoke scale.
+/** Driver-contract consistency: every oracle has a query, each query has
+  * at most one oracle, generated oracles do not depend on run order, and
+  * every query is callable at smoke scale.
   */
 class ContractSpec extends SparkSpec {
 
   test("every oracleSql key has a queries entry") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    val orphans = (SparkEntry.oracleSql.keySet ++ SparkEntry.generatedOracleSql.keySet) --
+      SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracles without queries: $orphans")
+  }
+
+  test("no query has both a static and a generated oracle") {
+    val both = SparkEntry.oracleSql.keySet & SparkEntry.generatedOracleSql.keySet
+    assert(both.isEmpty, s"two oracle definitions: $both")
+  }
+
+  test("a generated oracle renders the same before and after its query runs") {
+    val (cold, warm) = onColdCopy("/root/testdata/sf0.001") { dir =>
+      val names = SparkEntry.generatedOracleSql.keys.toSeq.sorted
+      def render() = names.map(n => n -> SparkEntry.generatedOracleSql(n)(spark, dir)).toMap
+      val cold = render() // before any query ran on the copy
+      names.foreach(n => SparkEntry.queries(n)(spark, dir).collect())
+      (cold, render())
+    }
+    val changed = cold.keys.filter(n => cold(n) != warm(n))
+    assert(changed.isEmpty, s"oracle text changed once the query ran: $changed")
   }
 
   test("every query plans (analysis passes) at sf0.001") {

@@ -54,8 +54,7 @@ class RegistryFingerprintSpec extends SparkSpec {
       s"Registry.path must fingerprint its input: $pathDef")
     val keyConfig = """Registry\.key\(\s*s?"([^"]+)"""".r
     val offenders = mainSources.flatMap { case (file, src) =>
-      // the oracle_sql fragments are fixture-keyed by name, not fitted
-      src.linesIterator.filter(l => l.contains("Registry.root") && !l.contains("\"oracle_sql\""))
+      src.linesIterator.filter(_.contains("Registry.root"))
         .map(l => s"$file: ${l.trim}") ++
       keyConfig.findAllMatchIn(src).map(_.group(1))
         .filterNot(_.contains("bucketed")) // bucketed tables are re-laid-out per process (in-memory catalog)

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 /** The registry's contract: a re-entrant fit-once memo, and an artifact
   * gate that only ever counts a committed write.
@@ -8,14 +8,6 @@ import java.nio.file.{Files, Path, Paths}
 class RegistrySpec extends SparkSpec {
 
   private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
-
-  private def deleteRecursively(root: Path): Unit =
-    if (Files.exists(root)) {
-      val stream = Files.walk(root)
-      try stream.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally stream.close()
-    }
 
   test("a memo fit that makes 1000 nested memo calls returns, each inner fit once") {
     val id = java.util.UUID.randomUUID().toString
@@ -72,7 +64,7 @@ class RegistrySpec extends SparkSpec {
       "the rebuild must start from scratch, not over the crashed attempt's leftovers")
     assert(spark.read.parquet(s"$out/b").count() == 7)
     assert(build(crash = true) == out && attempts == 2, "a committed artifact is never rewritten")
-    deleteRecursively(Paths.get(out))
+    SparkSpec.deleteRecursively(Paths.get(out))
   }
 
   test("a shingle index with meta/ committed but no docs/ gates as absent") {
@@ -87,26 +79,13 @@ class RegistrySpec extends SparkSpec {
 
   test("cold memo + cold artifacts, shuffled order: registry queries match the warm dir") {
     val src = "/root/testdata/sf0.001"
-    // a copy is a new dir key AND a new fingerprint: cold memo, cold disk
-    val copy = Paths.get(tmp("registry-cold"))
-    Files.walk(Paths.get(src)).forEach { p =>
-      val to = copy.resolve(Paths.get(src).relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
-    }
-    val before = Option(new java.io.File(Registry.root).list()).fold(Set.empty[String])(_.toSet)
-    val cold = try {
+    val cold = onColdCopy(src) { copy =>
       val order = new scala.util.Random(20261017L).shuffle(SparkEntry.queries.keys.toSeq.sorted)
       order.flatMap { name =>
         val n0 = Registry.lookups
-        val df = SparkEntry.queries(name)(spark, copy.toString)
+        val df = SparkEntry.queries(name)(spark, copy)
         if (Registry.lookups > n0) Some(name -> df.collect().toSeq) else None
       }
-    } finally {
-      deleteRecursively(copy)
-      // the copy's artifacts are keyed by its temp dir: never reused
-      Option(new java.io.File(Registry.root).list()).toSeq.flatten
-        .filterNot(before).filter(_ != "oracle_sql")
-        .foreach(n => deleteRecursively(Paths.get(Registry.root, n)))
     }
     val reached = cold.map(_._1).toSet
     assert(Set("dedup_clusters", "dedup_minhash_lsh", "simsearch_recall_audit",

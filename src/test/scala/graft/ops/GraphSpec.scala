@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Graph ops on hand-computable fixtures: K4 (every node in 3
   * triangles, clustering 1), a path graph (no triangles), and PageRank
-  * invariants (base floor, mass bound, hub dominance, determinism).
+  * invariants (base floor, mass bound, hub dominance, determinism), plus
+  * a static check that no op mutates session conf.
   */
 class GraphSpec extends SparkSpec {
   import spark.implicits._
@@ -53,5 +54,20 @@ class GraphSpec extends SparkSpec {
     val again = Graph.pagerank(edges, nodes, rounds = 10).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(again == pr)
+  }
+
+  test("no op under graft.ops sets session conf (static check)") {
+    // A library op that flips session-wide conf changes the plans of every
+    // query running concurrently on the same session; scope plan choices
+    // with hints instead.
+    val stream = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/ops"))
+    val offenders = try {
+      import scala.jdk.CollectionConverters._
+      stream.iterator().asScala.toSeq.filter(_.toString.endsWith(".scala")).flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+          .collect { case (l, i) if l.contains("conf.set(") => s"$p:${i + 1}: ${l.trim}" }
+      }
+    } finally stream.close()
+    assert(offenders.isEmpty, s"session conf set in library ops: $offenders")
   }
 }
